@@ -55,12 +55,10 @@ object DecontProbe {
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val work = args.drop(2).headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("decont_probe").toString)
-    val spark = SparkSession.builder()
+    val spark = SessionConf.common(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

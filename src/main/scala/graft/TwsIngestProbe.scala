@@ -45,14 +45,12 @@ object TwsIngestProbe {
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val work = args.drop(2).headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("tws_probe").toString)
-    val spark = SparkSession.builder()
+    val spark = SessionConf.common(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

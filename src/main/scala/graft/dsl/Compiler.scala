@@ -112,17 +112,22 @@ object Compiler {
         ds.groupByKey(_.key)(org.apache.spark.sql.Encoders.scalaLong)
           .flatMapGroups { (k: Long, it: Iterator[Keyed[A]]) =>
             val sorted = it.toVector.sortBy(_.seq)
-            Interpreter.eval(sp, sorted.iterator.map(_.value))
-              .take(MaxOutputsPerKey)
+            Interpreter.eval(sp, sorted.iterator.map(_.value)).iterator
               .zipWithIndex
-              .map { case (b, i) => Keyed(k, i.toLong, b) }
-              .iterator
+              .map { case (b, i) =>
+                if (i >= MaxOutputsPerKey) throw new IllegalStateException(
+                  s"Compiler.compile: key $k emitted more than MaxOutputsPerKey = " +
+                    s"$MaxOutputsPerKey outputs (a Put-only loop in the per-key fallback?)")
+                Keyed(k, i.toLong, b)
+              }
           }
     }
   }
 
   /** Safety valve for Put-only loops under finite batch input (a generator
-    * composed into a pipeline would otherwise emit forever). */
+    * composed into a pipeline would otherwise emit forever): the fallback
+    * fails the job, naming the key, once a key emits more outputs than
+    * this. */
   val MaxOutputsPerKey: Int = 10_000_000
 
   /** Demand-driven generator (reference R8 / `tests/demands.rs`): n steps of

@@ -54,9 +54,10 @@ object DedupQueries {
     * to force it; `SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES=-1` forces it
     * process-wide (the round-10 scale probe measures the distributed
     * rounds' real cost this way — below-gate bench numbers otherwise only
-    * ever exercise the fold). Unset, the default is unchanged. */
-  val LocalFoldMaxEdges: Long = sys.env.get("SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES")
-    .map(_.trim.toLong).getOrElse(4L << 20)
+    * ever exercise the fold). Unset, the default is unchanged. Lazy, so a
+    * malformed value fails at first use with a message naming the variable,
+    * not as an `ExceptionInInitializerError` of this object. */
+  lazy val LocalFoldMaxEdges: Long = graft.Env.long("SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES", 4L << 20)
 
   /** The K-tuning contract, executable. Random (non-neighbor) pairs collide
     * in a K-bit bucket with probability ~L/2^K, so candidates grow as

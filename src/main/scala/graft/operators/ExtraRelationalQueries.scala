@@ -2639,14 +2639,9 @@ object ExtraRelationalQueries {
 
   private def percentileDiscTwoLevel(li: org.apache.spark.sql.DataFrame,
       stCol: org.apache.spark.sql.Column, cents: org.apache.spark.sql.Column,
-      targets: Seq[Double],
-      // row weight: lit(1L) ranks raw rows; a histogram's count column
-      // ranks pre-aggregated (value, count) rows — sum(weight) over a
-      // group equals count(*) over the rows it collapsed, so both forms
-      // produce identical cumulative ranks (q92 feeds histograms here)
-      weight: org.apache.spark.sql.Column = lit(1L)): org.apache.spark.sql.DataFrame = {
+      targets: Seq[Double]): org.apache.spark.sql.DataFrame = {
     val coarse = li.groupBy(stCol.as("st"), (cents / 65536L).cast("long").as("b"))
-      .agg(sum(weight).as("hn"))
+      .agg(count(lit(1)).as("hn"))
     val wb = Window.partitionBy(col("st")).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cb = coarse
@@ -2663,11 +2658,10 @@ object ExtraRelationalQueries {
       .select(col("st"), col("p"), col("b"),
         (col("cum") - col("hn")).as("before"), col("n"))
     val fine = li
-      .select(stCol.as("st"), cents.as("c"), (cents / 65536L).cast("long").as("b"),
-        weight.as("wt"))
+      .select(stCol.as("st"), cents.as("c"), (cents / 65536L).cast("long").as("b"))
       .join(broadcast(picks), Seq("st", "b"))
       .groupBy(col("st"), col("p"), col("before"), col("n"), col("c"))
-      .agg(sum(col("wt")).as("fn"))
+      .agg(count(lit(1)).as("fn"))
     val wf = Window.partitionBy(col("st"), col("p")).orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     fine

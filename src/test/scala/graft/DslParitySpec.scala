@@ -151,4 +151,18 @@ class DslParitySpec extends SparkSpec {
     val expect = df.filter($"l_quantity" >= 30.0).count()
     assert(got === expect && got > 0)
   }
+
+  test("stateful fallback fails loudly, naming the key and the cap, past MaxOutputsPerKey") {
+    // a Put-only generator after the first Get never stops emitting; the
+    // fallback used to truncate it silently at the cap
+    val forever: SP[Int, Long] =
+      SP.get((_: Int) => SP.generate[Int, Long, Long](n => (n, n + 1), 0L))
+    val ds = spark.createDataset(Seq(Keyed(7L, 0L, 1)))
+    val e = intercept[Exception](
+      Compiler.compile(forever)(ds).write.format("noop").mode("overwrite").save())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("key 7") &&
+      msgs.contains(s"MaxOutputsPerKey = ${Compiler.MaxOutputsPerKey}"), msgs)
+  }
 }

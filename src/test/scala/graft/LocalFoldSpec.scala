@@ -118,4 +118,12 @@ class LocalFoldSpec extends SparkSpec {
       assert(local === dist, s"iters=$iters: local pageRank fold diverged")
     }
   }
+
+  test("a malformed SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES fails naming the variable and its value") {
+    val name = "SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES"
+    assert(Env.long(name, 4L << 20, Map.empty) === (4L << 20))
+    assert(Env.long(name, 4L << 20, Map(name -> " -1 ")) === -1L)
+    val e = intercept[IllegalArgumentException](Env.long(name, 4L << 20, Map(name -> "4M")))
+    assert(e.getMessage.contains(name) && e.getMessage.contains("'4M'"), e.getMessage)
+  }
 }
