@@ -1,6 +1,6 @@
 package graft.dsl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -17,8 +17,10 @@ final case class Keyed[A](key: Long, seq: Long, value: A)
   *     (whole-stage codegen; predicates push down to the scan).
   *     `Alternate(map, map)` additionally compiles to row_number-parity
   *     routing — no state machine needed.
-  *  2. *Typed stateless path* — opaque lambdas: `ds.map`/`ds.filter`
-  *     (distributed, no shuffle, key/seq preserved).
+  *  2. *Typed stateless path* — opaque lambdas: one `ds.map` (MapElements)
+  *     or `ds.filter` (TypedFilter) per stage, kryo-encoded in between so
+  *     Catalyst elides the round trips and the chain runs in whole-stage
+  *     codegen (distributed, no shuffle, key/seq preserved).
   *  3. *Stateful fallback* — anything with real Get/Put control flow runs
   *     the reference interpreter per key over seq-sorted groups: one shuffle
   *     by key, then embarrassingly parallel across keys. This is the batch
@@ -95,21 +97,19 @@ object Compiler {
       implicit encB: Encoder[Keyed[B]]): Dataset[Keyed[B]] = {
     statelessStages(sp) match {
       case Some(stages) =>
-        // no shuffle: element-wise over whatever partitioning the source has
-        ds.flatMap { ka =>
-          val out = stages.foldLeft(Option(ka.value: Any)) {
-            case (Some(v), MapStage(f, _)) => Some(f(v))
-            case (Some(v), FilterStage(p, _)) => if (p(v)) Some(v) else None
-            case (None, _) => None
-          }
-          out.map(v => Keyed(ka.key, ka.seq, v.asInstanceOf[B]))
-        }
+        // no shuffle; EliminateSerialization drops every kryo round trip
+        // between stages, so intermediate types need no Spark encoder
+        val anyEnc = Encoders.kryo[Keyed[Any]]
+        stages.foldLeft(ds.asInstanceOf[Dataset[Keyed[Any]]]) {
+          case (d, MapStage(f, _)) => d.map(k => Keyed(k.key, k.seq, f(k.value)))(anyEnc)
+          case (d, FilterStage(p, _)) => d.filter(k => p(k.value))
+        }.map(_.asInstanceOf[Keyed[B]])(encB)
       case None =>
         // one shuffle on key, then the reference interpreter per key —
         // per-key sequential (rspl semantics ARE sequential per stream),
         // parallel across keys. Keys must fit per-executor memory; at 100 TB
         // that is the same contract as any keyed stateful op.
-        ds.groupByKey(_.key)(org.apache.spark.sql.Encoders.scalaLong)
+        ds.groupByKey(_.key)(Encoders.scalaLong)
           .flatMapGroups { (k: Long, it: Iterator[Keyed[A]]) =>
             val sorted = it.toVector.sortBy(_.seq)
             Interpreter.eval(sp, sorted.iterator.map(_.value)).iterator

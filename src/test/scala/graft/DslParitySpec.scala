@@ -1,8 +1,14 @@
 package graft
 
 import graft.dsl.{Compiler, Interpreter, Keyed, SP}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.DecodeUsingSerializer
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+
+/** An intermediate element type with no Spark encoder (not a Product, not a
+  * bean): the typed path must carry it between stages anyway. */
+final class Opaque(val n: Int)
 
 /** Tier-A REF parity (SURVEY.md §5): compiled Spark output == the ported
   * rspl interpreter, per key, order-sensitive. Plus straight ports of the
@@ -18,15 +24,17 @@ class DslParitySpec extends SparkSpec {
       gen.apply(Gen.Parameters.default, Seed(42L + i)).foreach(body)
     }
 
+  private def keyed(input: Seq[Int]): Seq[Keyed[Int]] =
+    input.zipWithIndex.map { case (v, i) => Keyed((i % 3).toLong, i.toLong, v) }
+
   private def compiled[B](sp: SP[Int, B], input: Seq[Int])(
-      implicit enc: org.apache.spark.sql.Encoder[Keyed[B]]): Map[Long, Vector[B]] = {
-    val ds = spark.createDataset(
-      input.zipWithIndex.map { case (v, i) => Keyed((i % 3).toLong, i.toLong, v) })
-    Compiler.compile(sp)(ds)
-      .collect().toVector
+      implicit enc: Encoder[Keyed[B]]): Map[Long, Vector[B]] =
+    collectPerKey(Compiler.compile(sp)(spark.createDataset(keyed(input))))
+
+  private def collectPerKey[B](ds: Dataset[Keyed[B]]): Map[Long, Vector[B]] =
+    ds.collect().toVector
       .groupBy(_.key).view
       .mapValues(_.sortBy(_.seq).map(_.value)).toMap
-  }
 
   private def oracle[B](sp: SP[Int, B], input: Seq[Int]): Map[Long, Vector[B]] =
     input.zipWithIndex.groupBy(_._2 % 3).map { case (k, vs) =>
@@ -51,6 +59,62 @@ class DslParitySpec extends SparkSpec {
     checkAll(Gen.zip(genStateless, Gen.listOfN(30, Gen.choose(-50, 50))), 30) {
       case (sp, input) => assert(compiled(sp, input) === oracle(sp, input))
     }
+  }
+
+  // --- typed stateless path: value types, encoders, input shapes -----------
+  private def chain[A](sps: Seq[SP[A, A]]): SP[A, A] = sps.reduce(SP.compose(_, _))
+
+  private val genFilterOnly: Gen[SP[Int, Int]] = for {
+    n <- Gen.choose(1, 4)
+    ms <- Gen.listOfN(n, Gen.choose(1, 4))
+  } yield chain(ms.map(m => SP.filter[Int](_ % m == 0)))
+
+  private val genMapOnly: Gen[SP[Int, Int]] = for {
+    n <- Gen.choose(1, 4)
+    ks <- Gen.listOfN(n, Gen.choose(-5, 5))
+  } yield chain(ks.map(k => SP.map[Int, Int](v => v * 3 + k)))
+
+  /** Int -> String -> (Int, String), with a filter on the String stage. */
+  private def toPair(k: Int): SP[Int, (Int, String)] = SP.compose(
+    SP.compose(SP.map[Int, String](v => (v * k).toString), SP.filter[String](!_.startsWith("-"))),
+    SP.map[String, (Int, String)](s => (s.length, s)))
+
+  /** Int -> Opaque -> Int: the middle type has no Spark encoder. */
+  private def viaOpaque(m: Int): SP[Int, Int] = SP.compose(
+    SP.compose(SP.map[Int, Opaque](new Opaque(_)), SP.filter[Opaque](_.n % m == 0)),
+    SP.map[Opaque, Int](o => o.n * 2))
+
+  /** Every typed-path shape checked against the interpreter, per key, with
+    * input built from a local Seq and from a DataFrame `.as[Keyed[Int]]`. */
+  private def checkTypedPath(s: SparkSession): Unit = {
+    def inputs(input: Seq[Int]): Seq[Dataset[Keyed[Int]]] = Seq(
+      s.createDataset(keyed(input)),
+      s.createDataFrame(keyed(input).map(k => (k.key, k.seq, k.value)))
+        .toDF("key", "seq", "value").as[Keyed[Int]])
+    def same[B](sp: SP[Int, B], input: Seq[Int])(
+        implicit enc: Encoder[Keyed[B]]): Unit =
+      inputs(input).foreach(ds => assert(collectPerKey(Compiler.compile(sp)(ds)) === oracle(sp, input)))
+    val genInput = Gen.listOfN(30, Gen.choose(-50, 50))
+    checkAll(Gen.zip(Gen.oneOf(genStateless, genFilterOnly, genMapOnly), genInput), 12) {
+      case (sp, input) => same(sp, input)
+    }
+    checkAll(Gen.zip(Gen.choose(-3, 3), genInput), 4) { case (k, input) => same(toPair(k), input) }
+    checkAll(Gen.zip(Gen.choose(1, 4), genInput), 4) { case (m, input) => same(viaOpaque(m), input) }
+  }
+
+  test("property: typed path — type-changing, encoder-less, filter-only, map-only, DataFrame input") {
+    checkTypedPath(spark)
+  }
+
+  test("property: typed path is correct when EliminateSerialization does not fire (kryo round trips run)") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.EliminateSerialization")
+    // the rule really is off: the kryo deserializer stays in the plan
+    val plan = Compiler.compile(viaOpaque(2))(s.createDataset(keyed(1 to 10)))
+      .queryExecution.optimizedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[DecodeUsingSerializer[_]]))), plan)
+    checkTypedPath(s)
   }
 
   // --- random stateful terms (Get/Put, alternate, fsm) ----------------------

@@ -439,4 +439,45 @@ class PlanQualitySpec extends SparkSpec {
       "same-session rotation must unpersist the previous generation")
     Seq(b, c).foreach(_.unpersist())
   }
+
+  test("DSL typed path: each stage is a codegen'd MapElements/Filter, no MapPartitions, no kryo") {
+    // a per-element ds.flatMap is a MapPartitions boundary outside
+    // whole-stage codegen (~2x slower on dsl-load); the stages are kryo-typed
+    // in between, so Catalyst must drop every kryo round trip for the chain
+    // to codegen with its source
+    import graft.dsl.{Compiler, Keyed, SP}
+    import org.apache.spark.sql.catalyst.expressions.objects.{DecodeUsingSerializer, EncodeUsingSerializer}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import spark.implicits._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // operators inside a codegen stage (an InputAdapter ends the stage)
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    val lambdas = SP.compose(
+      SP.compose(SP.filter[Long](_ % 2 == 0), SP.map[Long, String](_.toString)),
+      SP.map[String, Long](_.length.toLong))
+    val cases = Seq(
+      "lambda pipeline" ->
+        Compiler.compile(lambdas)(spark.range(1000).map(i => Keyed(i % 7, i.longValue, i.longValue))).toDF(),
+      "r06_dsl_typed_fusion" -> SparkEntry.queries("r06_dsl_typed_fusion")(spark, sf))
+    for ((name, df) <- cases) {
+      df.collect() // AQE settles the final plan on the first action
+      val plan = df.queryExecution.executedPlan
+      val nodes = aqe.collect(plan) { case p => p }
+      assert(!nodes.exists(_.isInstanceOf[MapPartitionsExec]), s"$name: MapPartitions boundary:\n$plan")
+      val kryo = nodes.flatMap(_.expressions).exists(_.exists {
+        case _: EncodeUsingSerializer | _: DecodeUsingSerializer[_] => true
+        case _ => false
+      })
+      assert(!kryo, s"$name: a kryo serialize/deserialize pair survived the optimizer:\n$plan")
+      val codegen = aqe.collect(plan) { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+      val ops = nodes.filter(p => p.isInstanceOf[MapElementsExec] || p.isInstanceOf[FilterExec])
+      assert(ops.count(_.isInstanceOf[MapElementsExec]) >= 2, s"$name: pipeline stages missing:\n$plan")
+      assert(ops.forall(op => codegen.exists(_ eq op)),
+        s"$name: a pipeline MapElements/Filter runs outside whole-stage codegen:\n$plan")
+    }
+  }
 }
