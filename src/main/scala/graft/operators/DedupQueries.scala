@@ -52,9 +52,10 @@ object DedupQueries {
     * mined pair set is small skip tens of scheduler round-trips per query.
     * Tests that exercise the distributed loop itself pass a negative gate
     * to force it; `SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES=-1` forces it
-    * process-wide (the round-10 scale probe measures the distributed
-    * rounds' real cost this way — below-gate bench numbers otherwise only
-    * ever exercise the fold). Unset, the default is unchanged. Lazy, so a
+    * process-wide (`tools/iter_probe.sh` measures the distributed rounds'
+    * real cost this way — below-gate bench numbers otherwise only ever
+    * exercise the fold). Which side a call took reads from its
+    * `graft.gate.<op>` Observation (see [[OpCache.checkpointObserved]]). Unset, the default is unchanged. Lazy, so a
     * malformed value fails at first use with a message naming the variable,
     * not as an `ExceptionInInitializerError` of this object. */
   lazy val LocalFoldMaxEdges: Long = graft.Env.long("SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES", 4L << 20)
@@ -536,22 +537,19 @@ object DedupQueries {
     *    the driver only reads metrics (no data collect). If the cap is
     *    ever hit without convergence the query FAILS rather than silently
     *    emitting wrong labels (templated corpora produce arbitrarily long
-    *    near-dup chains; a silent cap would mislabel them). */
-  /** Per-round frontier telemetry of the MOST RECENT [[clusterLabels]]
-    * call on this driver: element i = how many labels changed in round
-    * i + 1 (the Observation side-metric each round already collects;
-    * recording it costs nothing extra), final element always 0 — the
-    * converged round. Length = DISTRIBUTED rounds run (Nil when the
-    * local-fold path handled the call: zero rounds). This is THE
-    * capacity-planning number for the iterative dedup family at 100 TB:
+    *    near-dup chains; a silent cap would mislabel them).
+    *
+    * Telemetry rides the same side-metrics as named Observations (see
+    * [[OpCache.checkpointObserved]]): `graft.gate.clusterLabels` carries
+    * the mined edge count the gate decided on, and each distributed round
+    * emits one `graft.rounds.clusterLabels` row with the number of labels
+    * it changed, the converged round's 0 last (none on the fold path).
+    * This is the capacity-planning number for the iterative dedup family:
     * rounds grow with log(component diameter), not with data size, and a
-    * frontier that stops shrinking flags a templated-corpus long chain
-    * before the maxRounds failure does. Driver-side like the loop itself;
-    * written once per call, after convergence. */
-  private[graft] val lastClusterFrontier =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Long]](Nil)
-
-  /** Example (run verbatim by DocExamplesSpec): a 2-chain, an edgeless
+    * frontier that stops shrinking flags a long templated-corpus chain
+    * before the maxRounds failure does.
+    *
+    * Example (run verbatim by DocExamplesSpec): a 2-chain, an edgeless
     * singleton, and a pair collapse to min-id cluster labels:
     * {{{
     * val docs  = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
@@ -568,18 +566,11 @@ object DedupQueries {
     // distributed loop previously materialized it into its edge cache
     // anyway), and the size gate rides it as an Observation side-metric —
     // no standalone count action (the ObservationJobsSpec discipline).
-    val pObs = new org.apache.spark.sql.Observation()
-    val p = pairs.select($"doc_a", $"doc_b")
-      .observe(pObs, count(lit(1)).as("n")).localCheckpoint()
-    val nEdges = pObs.get.getOrElse("n", null) match {
-      case n: java.lang.Long => n.longValue()
-      case _ => 0L
-    }
+    val (p, nEdges) = OpCache.checkpointObserved(pairs.select($"doc_a", $"doc_b"),
+      "graft.gate.clusterLabels", count(lit(1)))
     val labels =
-      if (localFoldMaxEdges >= 0L && nEdges <= localFoldMaxEdges) {
-        lastClusterFrontier.set(Nil) // zero distributed rounds ran
-        localFoldLabels(p)
-      } else distributedLabels(p, maxRounds)
+      if (localFoldMaxEdges >= 0L && nEdges <= localFoldMaxEdges) localFoldLabels(p)
+      else distributedLabels(p, maxRounds)
     // isolated nodes re-enter with their own id as the label
     docs.select($"doc_id").join(labels, Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))
@@ -675,18 +666,15 @@ object DedupQueries {
       // job-overhead stretch item; ObservationJobsSpec asserts the job
       // count). This also retires the old rounds<2 count-skip heuristic:
       // the exact count is now free every round.
-      val obs = new org.apache.spark.sql.Observation()
-      val next = stepped.join(
-          stepped.select($"doc_id".as("cluster_id"), $"cluster_id".as("ll")),
-          Seq("cluster_id"), "left")
-        .select($"doc_id", $"old",
-          least($"cluster_id", coalesce($"ll", $"cluster_id")).as("cluster_id"))
-        .observe(obs, sum(($"cluster_id" =!= $"old").cast("long")).as("changed"))
-        .localCheckpoint()
-      changed = obs.get.getOrElse("changed", null) match {
-        case n: java.lang.Long => n.longValue()
-        case _ => 0L // empty label table: sum over no rows, already converged
-      }
+      val (next, c) = OpCache.checkpointObserved(
+        stepped.join(
+            stepped.select($"doc_id".as("cluster_id"), $"cluster_id".as("ll")),
+            Seq("cluster_id"), "left")
+          .select($"doc_id", $"old",
+            least($"cluster_id", coalesce($"ll", $"cluster_id")).as("cluster_id")),
+        "graft.rounds.clusterLabels",
+        sum(($"cluster_id" =!= $"old").cast("long"))) // null (no rows) reads 0: converged
+      changed = c
       stepped.unpersist()
       labels = next.select($"doc_id", $"cluster_id")
       frontier += changed
@@ -695,10 +683,9 @@ object DedupQueries {
     require(changed == 0,
       s"near-dup clustering did not converge after $rounds rounds " +
         s"($changed labels still changing); raise maxRounds")
-    lastClusterFrontier.set(frontier.result())
     org.slf4j.LoggerFactory.getLogger("graft.DedupQueries")
       .info(s"clusterLabels converged in $rounds rounds; " +
-        s"frontier=${lastClusterFrontier.get().mkString(",")}")
+        s"frontier=${frontier.result().mkString(",")}")
     edges.unpersist()
     labels
   }

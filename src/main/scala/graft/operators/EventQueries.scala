@@ -1280,9 +1280,12 @@ object EventQueries {
     * visited nodes, and stops when the frontier empties — the number of
     * Spark jobs is the graph's eccentricity from the source, and each
     * round's shuffle is proportional to the frontier's out-edges, not the
-    * graph. The per-round count() is the demand-driven convergence check
-    * (same discipline as d08 / hics); localCheckpoint truncates the
-    * accumulating union lineage. Below the
+    * graph. Each round's frontier size is the demand-driven convergence
+    * check, a side-metric of the round's checkpoint job (same discipline as
+    * d08); localCheckpoint truncates the accumulating union lineage. The
+    * counts are named Observations: `graft.gate.bfsLevels` (the edge count
+    * the gate decided on) and one `graft.rounds.bfsLevels` row per depth
+    * (its frontier size, 0 last). Below the
     * [[graft.operators.DedupQueries.LocalFoldMaxEdges]] gate the whole
     * traversal instead folds in ONE executor task (levels are a pure
     * function of (edges, source), so the two paths agree by construction;
@@ -1319,13 +1322,8 @@ object EventQueries {
     // materialization replaces a per-depth recompute of the edge derivation.
     var loopEdges = edges
     if (more && localFoldMaxEdges >= 0L) {
-      val eObs = new org.apache.spark.sql.Observation()
-      val e = edges.select($"src", $"dst")
-        .observe(eObs, count(lit(1)).as("n")).localCheckpoint()
-      val nEdges = eObs.get.getOrElse("n", null) match {
-        case n: java.lang.Long => n.longValue()
-        case _ => 0L
-      }
+      val (e, nEdges) = OpCache.checkpointObserved(edges.select($"src", $"dst"),
+        "graft.gate.bfsLevels", count(lit(1)))
       if (nEdges == 0L) {
         // An empty edge frame materializes as 0 partitions, so the
         // coalesce(1) fold closure below would never run and a PRESENT
@@ -1368,18 +1366,13 @@ object EventQueries {
       // frontier-emptiness rides the checkpoint job as an Observation
       // side-metric (the clusterLabels discipline): one job per round for
       // the frontier, none for the emptiness probe
-      val obs = new org.apache.spark.sql.Observation()
-      val next = frontier.join(loopEdges, frontier("node") === loopEdges("src"))
-        .select($"dst".as("node")).distinct()
-        .join(levels, Seq("node"), "left_anti")
-        .select($"node", lit(depth).as("lvl"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val grew = obs.get.getOrElse("n", null) match {
-        case n: java.lang.Long => n.longValue() > 0L
-        case _ => false
-      }
-      if (!grew) more = false
+      val (next, reached) = OpCache.checkpointObserved(
+        frontier.join(loopEdges, frontier("node") === loopEdges("src"))
+          .select($"dst".as("node")).distinct()
+          .join(levels, Seq("node"), "left_anti")
+          .select($"node", lit(depth).as("lvl")),
+        "graft.rounds.bfsLevels", count(lit(1)))
+      if (reached == 0L) more = false
       else {
         levels = levels.unionByName(next).localCheckpoint()
         frontier = next
@@ -1427,18 +1420,14 @@ object EventQueries {
     // endpoint is in `nodes` — callers that construct both from the same
     // key domain (q48: nodes = distinct k, edges ⊆ k×k) pass the gate
     // explicitly; general callers keep the distributed loop. Edge count
-    // rides the checkpoint as an Observation (no extra count action), and
+    // rides the checkpoint as the named Observation `graft.gate.pageRank`
+    // (no extra count action), and
     // the fold replays the exact integer recurrence ((r*w) div ow per edge,
     // then 150000 + (85*c) div 100) so results are bit-identical
     // (LocalFoldSpec asserts it against the distributed loop).
     if (localFoldMaxEdges >= 0L && iters > 0) {
-      val eObs = new org.apache.spark.sql.Observation()
-      val e = edges.select($"src", $"dst", $"w")
-        .observe(eObs, count(lit(1)).as("n")).localCheckpoint()
-      val nEdges = eObs.get.getOrElse("n", null) match {
-        case n: java.lang.Long => n.longValue()
-        case _ => 0L
-      }
+      val (e, nEdges) = OpCache.checkpointObserved(edges.select($"src", $"dst", $"w"),
+        "graft.gate.pageRank", count(lit(1)))
       if (nEdges <= localFoldMaxEdges) {
         val ranks = e.as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
           val es = it.toArray

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.storage.StorageLevel
 
 /** Rotating per-operator cache slots for operators whose plan reads one
@@ -25,7 +25,10 @@ import org.apache.spark.storage.StorageLevel
   * cache early — harmless for correctness (Spark recomputes evicted
   * partitions from lineage), only a perf hazard, and no driver here
   * (Verify, Bench, the test suites) runs an operator concurrently with
-  * itself in one session. */
+  * itself in one session.
+  *
+  * [[checkpointObserved]] is the other way operators materialize: the
+  * iterative graph kernels' eager checkpoints with their one side-metric. */
 private[graft] object OpCache {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.OpCache")
@@ -58,5 +61,21 @@ private[graft] object OpCache {
       }
     }
     p
+  }
+
+  /** Eager `localCheckpoint` of `df` that also returns `metric` (a Long
+    * aggregate: an edge count, a round's changed-label or frontier count)
+    * as a side-metric of the same job — no extra count action. A null
+    * result (a sum over no rows) reads 0. The Observation is named, so any
+    * `QueryExecutionListener` reads the value from that execution's
+    * `qe.observedMetrics` under `name` (column `n`) — per query execution,
+    * with no driver-global state. Names: `graft.gate.<op>` for a size
+    * gate's edge count, `graft.rounds.<op>` for a per-round count (one row
+    * per round, in order). Reusing a name across calls is safe: the
+    * checkpoint cuts the observed plan out of every later query. */
+  def checkpointObserved(df: DataFrame, name: String, metric: Column): (DataFrame, Long) = {
+    val obs = new Observation(name)
+    val out = df.observe(obs, metric.as("n")).localCheckpoint()
+    (out, obs.get.get("n").collect { case n: java.lang.Long => n.longValue }.getOrElse(0L))
   }
 }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * Timeout support covers the reference's `EmitTimeoutAfter` feedback
   * pattern (`examples/pelican.rs:323-325,346-367`): instead of an external
   * timer thread feeding events back into the input channel (cycles are
-  * impossible in Structured Streaming), a processing-time timeout fires the
-  * transition with `None`.
+  * impossible in Structured Streaming), a `transformWithState` timer
+  * fires the transition with `None` ([[fsmStreamWithTimersTws]]).
   */
 object StreamFsm {
 
@@ -71,80 +71,24 @@ object StreamFsm {
           out.iterator
       }
 
-  /** FSM with a per-key processing-time timeout: when no input arrives for
-    * `timeoutMs`, the transition fires with `None` (the pelican
-    * `Event::Timeout` analogue) and may emit + change state. */
-  def fsmStreamWithTimeout[S, A, B](ds: Dataset[Keyed[A]], init: S, timeoutMs: Long)(
-      t: (S, Option[A]) => (S, Seq[B]))(
-      implicit encLong: Encoder[Long],
-      encState: Encoder[FsmState[S]],
-      encOut: Encoder[Keyed[B]]): Dataset[Keyed[B]] =
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[FsmState[S], Keyed[B]](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: Long, it: Iterator[Keyed[A]], state: GroupState[FsmState[S]]) =>
-          val st0 = state.getOption.getOrElse(FsmState(init, 0L))
-          var s = st0.userState
-          var emitted = st0.emitted
-          def emit(bs: Seq[B]): Seq[Keyed[B]] = bs.map { b =>
-            val kb = Keyed(key, emitted, b); emitted += 1; kb
-          }
-          val out =
-            if (state.hasTimedOut) {
-              // one-shot: fire the None transition, do NOT re-arm (the
-              // reference's EmitTimeoutAfter schedules a single timeout;
-              // re-arming here would also self-trigger batches forever and
-              // never let the query drain)
-              val (s2, bs) = t(s, None)
-              s = s2
-              val o = emit(bs)
-              state.update(FsmState(s, emitted))
-              o
-            } else {
-              val o = it.toVector.sortBy(_.seq).flatMap { ka =>
-                val (s2, bs) = t(s, Some(ka.value))
-                s = s2
-                emit(bs)
-              }
-              state.update(FsmState(s, emitted))
-              state.setTimeoutDuration(timeoutMs) // re-armed by input only
-              o
-            }
-          out.iterator
-      }
-
   /** Mealy machine on the Spark 4 `transformWithState` operator (state-store
     * v2): `ValueState` holds the FSM state; requires the RocksDB state store
-    * provider. Same contract and output sequence as [[fsmStream]]. */
+    * provider. Same contract and output sequence as [[fsmStream]]: the
+    * timer machine of [[fsmStreamWithTimersTws]] with no time mode and a
+    * transition that never arms. */
   def fsmStreamTws[S, A, B](ds: Dataset[Keyed[A]], init: S)(
       t: (S, A) => (S, Seq[B]))(
       implicit encLong: Encoder[Long],
       encState: Encoder[FsmState[S]],
-      encOut: Encoder[Keyed[B]]): Dataset[Keyed[B]] =
+      encOut: Encoder[Keyed[B]]): Dataset[Keyed[B]] = {
+    val untimed: (S, Option[A]) => (S, Seq[B], Option[Long]) = {
+      case (s, Some(a)) => val (s2, bs) = t(s, a); (s2, bs, None)
+      case (s, None) => (s, Nil, None) // no timer is ever armed
+    }
     ds.groupByKey(_.key)
       .transformWithState(
-        new MealyProcessor[S, A, B](init, t, encState),
+        new TimerMealyProcessor[S, A, B](init, untimed, encState),
         TimeMode.None(), OutputMode.Append(), encOut)
-
-  private final class MealyProcessor[S, A, B](
-      zero: S, t: (S, A) => (S, Seq[B]), encState: Encoder[FsmState[S]])
-      extends StatefulProcessor[Long, Keyed[A], Keyed[B]] {
-    @transient private var st: ValueState[FsmState[S]] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState("fsm", encState, TTLConfig.NONE)
-    override def handleInputRows(
-        key: Long, rows: Iterator[Keyed[A]], tv: TimerValues): Iterator[Keyed[B]] = {
-      val st0 = Option(st.get()).getOrElse(FsmState(zero, 0L))
-      var s = st0.userState
-      var emitted = st0.emitted
-      val out = rows.toVector.sortBy(_.seq).flatMap { ka =>
-        val (s2, bs) = t(s, ka.value)
-        s = s2
-        bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
-      }
-      st.update(FsmState(s, emitted))
-      out.iterator
-    }
   }
 
   /** Keyed element carrying the event time the watermark tracks — the input
@@ -250,7 +194,8 @@ object StreamFsm {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState("fsm", encState, TTLConfig.NONE)
 
-    private def arm(nowMs: Long, delayMs: Option[Long]): Unit =
+    // `nowMs` by name: an untimed machine never arms, so never reads the clock
+    private def arm(nowMs: => Long, delayMs: Option[Long]): Unit =
       delayMs.foreach { d =>
         getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
         getHandle.registerTimer(nowMs + d)

@@ -847,9 +847,6 @@ class DocExamplesSpec extends SparkSpec {
       "LocalFoldMaxEdges", // size-gate constant; behavior (local fold ==
                         // distributed rounds on either side of the gate)
                         // exercised by LocalFoldSpec
-      "lastClusterFrontier", // private[graft] telemetry holder (per-round
-                        // frontier of the last clusterLabels call); gated
-                        // by ObservationJobsSpec, not an operator
       "minhashNearDupPairsUnordered", // private[graft] sort-free form of the
                         // documented minhashNearDupPairs (same pair set,
                         // minus d03's declared output order); gated by every

@@ -37,13 +37,14 @@ class LocalFoldSpec extends SparkSpec {
     cases.foreach { case (name, pairSeq) =>
       val docs = (0L until 130L).toDF("doc_id")
       val pairs = pairSeq.toDF("doc_a", "doc_b")
-      val local = DedupQueries.clusterLabels(docs, pairs)
-        .as[(Long, Long)].collect().toSeq
-      assert(DedupQueries.lastClusterFrontier.get() === Nil,
-        s"$name: small graph must take the local fold (frontier records no rounds)")
-      val dist = DedupQueries.clusterLabels(docs, pairs, localFoldMaxEdges = -1L)
-        .as[(Long, Long)].collect().toSeq
-      assert(DedupQueries.lastClusterFrontier.get().nonEmpty,
+      val (local, lt) = trace(DedupQueries.clusterLabels(docs, pairs)
+        .as[(Long, Long)].collect().toSeq)
+      assert(lt.longs("graft.gate.clusterLabels").length === 1 &&
+        lt.longs("graft.rounds.clusterLabels").isEmpty,
+        s"$name: small graph must take the local fold (no rounds): ${lt.observed}")
+      val (dist, dt) = trace(DedupQueries.clusterLabels(docs, pairs, localFoldMaxEdges = -1L)
+        .as[(Long, Long)].collect().toSeq)
+      assert(dt.longs("graft.rounds.clusterLabels").nonEmpty,
         s"$name: forced distributed path must record its rounds")
       assert(local === dist, s"$name: local fold diverged from distributed labels")
     }

@@ -53,6 +53,28 @@ class Scale100Spec extends SparkSpec {
       f"$name runtime beyond a linear fit: ${tS}%.2f s -> ${tL}%.2f s for 100x data")
   }
 
+  /** Round telemetry of the last two clusterLabels calls in `t` (the 1x
+    * and 100x runs of [[assert100x]]), read from the named Observations:
+    * each call emits one `graft.gate.clusterLabels` row, then one
+    * `graft.rounds.clusterLabels` row per round. Same round count at both
+    * sizes, and every round's frontier exactly 100x. */
+  private def assertFixedRounds(name: String, t: Traced): Unit = {
+    val calls = t.observed.foldLeft(Vector.empty[Vector[Long]]) {
+      case (cs, ("graft.gate.clusterLabels", _)) => cs :+ Vector.empty
+      case (cs, ("graft.rounds.clusterLabels", r)) if cs.nonEmpty =>
+        cs.init :+ (cs.last :+ r.getAs[Long]("n"))
+      case (cs, _) => cs
+    }
+    assert(calls.length >= 2, s"$name: expected the 1x and 100x calls, got ${t.observed}")
+    val Seq(fS, fL) = calls.takeRight(2)
+    info(s"$name rounds: 1x -> ${fS.length} ${fS.mkString("[", ",", "]")}, " +
+      s"100x -> ${fL.length} ${fL.mkString("[", ",", "]")}")
+    assert(fL.length === fS.length,
+      s"$name: propagation rounds must track DIAMETER, not data size: $fS vs $fL")
+    assert(fL === fS.map(_ * 100L),
+      s"$name: per-round frontier must scale exactly with the 100x data: $fS vs $fL")
+  }
+
   test("t44 decontamination: 100x corpus => ≲linear runtime, pinned deterministic drops") {
     // dropped-doc counts are a pure function of the deterministic corpus
     // and the deterministic hash split (a train doc drops iff its sole
@@ -90,30 +112,21 @@ class Scale100Spec extends SparkSpec {
   test("d08 cluster labels: 100x graph => exact components, ≲linear runtime, FIXED rounds") {
     // chains of 8 consecutive ids at constant diameter: component count is
     // exactly n/8 and pointer-jumping rounds stay fixed while n grows 100x
-    val frontiers = scala.collection.mutable.Map[Long, Seq[Long]]()
     def graph(n: Int): DataFrame = spark.range(n).toDF("doc_id")
     def run(docs: DataFrame): Long = {
       val ids = docs.select($"doc_id")
       val edges = ids.filter($"doc_id" % 8 =!= 7)
         .select($"doc_id".as("doc_a"), ($"doc_id" + 1).as("doc_b"))
-      val k = DedupQueries.clusterLabels(docs, edges, localFoldMaxEdges = -1L)
+      DedupQueries.clusterLabels(docs, edges, localFoldMaxEdges = -1L)
         .select($"cluster_id").distinct().count() // distributed rounds are the subject
-      frontiers(k) = DedupQueries.lastClusterFrontier.get()
-      k
     }
-    assert100x("d08", run, graph(40000), graph(4000000), 5000L, 500000L)
+    val (_, t) = trace(assert100x("d08", run, graph(40000), graph(4000000), 5000L, 500000L))
     // the third decade of round telemetry (rounds-track-diameter, measured
     // — sf1_probe.json holds the sf0.1->sf1 pair, this is the 100x point):
     // identical chain diameter => identical round count, and each round's
     // changed-label frontier is EXACTLY 100x (the graph is 100 disjoint
     // copies and label propagation is deterministic dataflow)
-    val (fS, fL) = (frontiers(5000L), frontiers(500000L))
-    info(s"d08 rounds: 1x -> ${fS.length} ${fS.mkString("[", ",", "]")}, " +
-      s"100x -> ${fL.length} ${fL.mkString("[", ",", "]")}")
-    assert(fL.length === fS.length,
-      s"pointer-jumping rounds must track DIAMETER, not data size: $fS vs $fL")
-    assert(fL === fS.map(_ * 100L),
-      s"per-round frontier must scale exactly with the 100x data: $fS vs $fL")
+    assertFixedRounds("d08", t)
   }
 
   test("s09 kNN graph: 100x corpus => linear edges and ≲linear runtime") {
@@ -128,28 +141,19 @@ class Scale100Spec extends SparkSpec {
   test("s11 semantic clusters: 100x corpus => exact labels, ≲linear runtime, FIXED rounds") {
     // mutual-kNN over the same geometry: one label per vector, and the
     // distinct-label count is exactly the n/4 construction clusters
-    val frontiers = scala.collection.mutable.Map[Long, Seq[Long]]()
     def run(df: DataFrame): Long = {
       val labels = graft.operators.SimilarityQueries
         .semanticClusters(spark, df, tables = 8, planesPerTable = 40,
           localFoldMaxEdges = -1L) // distributed round telemetry is the subject
       val n = labels.count()
       val k = labels.select($"cluster_id").distinct().count()
-      val packed = n * 1000000L + k // pack both invariants into one asserted number
-      frontiers(packed) = DedupQueries.lastClusterFrontier.get()
-      packed
+      n * 1000000L + k // pack both invariants into one asserted number
     }
-    val (pS, pL) = (2000L * 1000000L + 500L, 200000L * 1000000L + 50000L)
-    assert100x("s11", run, vecCorpus(2000), vecCorpus(200000), pS, pL)
+    val (_, t) = trace(assert100x("s11", run, vecCorpus(2000), vecCorpus(200000),
+      2000L * 1000000L + 500L, 200000L * 1000000L + 50000L))
     // third-decade round telemetry: constant 4-vector cluster diameter =>
     // identical propagation rounds at 1x and 100x, frontier exactly 100x
-    val (fS, fL) = (frontiers(pS), frontiers(pL))
-    info(s"s11 rounds: 1x -> ${fS.length} ${fS.mkString("[", ",", "]")}, " +
-      s"100x -> ${fL.length} ${fL.mkString("[", ",", "]")}")
-    assert(fL.length === fS.length,
-      s"label-propagation rounds must track DIAMETER, not data size: $fS vs $fL")
-    assert(fL === fS.map(_ * 100L),
-      s"per-round frontier must scale exactly with the 100x data: $fS vs $fL")
+    assertFixedRounds("s11", t)
   }
 
   // ----- the iterative graph family (q48/q54/q55) ---------------------------

@@ -278,7 +278,7 @@ class StreamingSpec extends SparkSpec {
       try {
         ms.addData((1L, 0L, "go"))
         // poll the sink: each expiry must re-arm the next one, so ticks keep
-        // arriving — the one-shot flatMapGroupsWithState path cannot do this
+        // arriving
         val deadline = System.currentTimeMillis() + 60000
         var vals = Array.empty[String]
         while (vals.length < 3 && System.currentTimeMillis() < deadline) {
@@ -865,35 +865,36 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("fsm with processing-time timeout emits on silence (pelican P4 shape)") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, String)]
-    val keyed = ms.toDS().map { case (k, seq, v) => Keyed(k, seq, v) }
-    val out = StreamFsm.fsmStreamWithTimeout(keyed, 0L, timeoutMs = 200L) {
-      (n: Long, e: Option[String]) =>
-        e match {
-          case Some(_) => (n + 1, Nil)
-          case None => (n, Seq(s"timeout_after_$n")) // fired with no input
-        }
-    }
-    val q = out.writeStream.format("memory").queryName("fsm_timeout")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
-      .start()
-    try {
-      ms.addData((1L, 0L, "a"), (1L, 1L, "b"))
-      // Do NOT call processAllAvailable here: with processing-time timeouts
-      // the engine keeps running batches on every trigger and the
-      // caught-up condition never settles. Just poll the sink — the input
-      // batch and then the self-triggered timeout batch arrive on their own.
-      val deadline = System.currentTimeMillis() + 60000
-      var vals = Array.empty[String]
-      while (vals.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(250)
-        vals = spark.table("fsm_timeout").as[Keyed[String]]
-          .collect().filter(_.key == 1L).map(_.value)
+    withRocksDb {
+      implicit val sq = spark.sqlContext
+      val ms = MemoryStream[(Long, Long, String)]
+      val keyed = ms.toDS().map { case (k, seq, v) => Keyed(k, seq, v) }
+      // input arms a 200 ms timer; the expiry arms none, so it fires once
+      val out = StreamFsm.fsmStreamWithTimersTws(keyed, 0L) {
+        (n: Long, e: Option[String]) =>
+          e match {
+            case Some(_) => (n + 1, Nil, Some(200L))
+            case None => (n, Seq(s"timeout_after_$n"), None) // fired with no input
+          }
       }
-      assert(vals.contains("timeout_after_2"), s"got: ${vals.toSeq}")
-    } finally q.stop()
+      val q = out.writeStream.format("memory").queryName("fsm_timeout")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
+        .start()
+      try {
+        ms.addData((1L, 0L, "a"), (1L, 1L, "b"))
+        // Poll the sink rather than processAllAvailable: the input batch
+        // and then the timer batch arrive on their own triggers.
+        val deadline = System.currentTimeMillis() + 60000
+        var vals = Array.empty[String]
+        while (vals.isEmpty && System.currentTimeMillis() < deadline) {
+          Thread.sleep(250)
+          vals = spark.table("fsm_timeout").as[Keyed[String]]
+            .collect().filter(_.key == 1L).map(_.value)
+        }
+        assert(vals.contains("timeout_after_2"), s"got: ${vals.toSeq}")
+      } finally q.stop()
+    }
   }
 
   test("streaming EWMA equals the batch recurrence for any split, redelivery is a no-op") {
