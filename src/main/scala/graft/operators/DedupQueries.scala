@@ -1510,8 +1510,11 @@ object DedupQueries {
     */
   def incrementalNearDupPairs(s: SparkSession, docs: DataFrame, newIds: DataFrame): DataFrame = {
     import s.implicits._
-    val sh = cached(shinglesOf(s, docs.select($"doc_id", $"text")))
-    val bands = cached(bandRowsTyped(s, sh))
+    // computed once per query, like cached(), but freed with the returned
+    // plan: the streaming caller passes a new `docs` every micro-batch, and
+    // a CacheManager entry per batch would pin every batch's frames
+    val sh = shinglesOf(s, docs.select($"doc_id", $"text")).localCheckpoint(eager = false)
+    val bands = bandRowsTyped(s, sh).localCheckpoint(eager = false)
     incrementalFromNewBands(sh, bands,
       bands.join(newIds.select($"doc_id"), Seq("doc_id"), "left_semi"))
   }

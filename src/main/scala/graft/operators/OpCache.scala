@@ -43,16 +43,19 @@ private[graft] object OpCache {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     Option(slots.put(key, p)).foreach { prev =>
       // Unpersist the previous generation ONLY when it is a semantically
-      // different plan. CacheManager keys entries by sameResult — two
-      // invocations over the same input path produce canonically EQUAL
-      // plans (InMemoryFileIndex compares rootPaths), so persist() above
-      // re-registered the SAME entry and unpersisting `prev` would evict
-      // the frame just cached: every same-plan slot was silently dead in
-      // any run that re-invoked its operator (the bench's warmup + timed
-      // protocol re-invokes every query). When the plans match there is
-      // nothing extra to drop — the slot still holds exactly one entry.
+      // different plan. CacheManager keys entries by sameResult of the
+      // NORMALIZED plans — two invocations over the same input path
+      // produce canonically EQUAL plans (InMemoryFileIndex compares
+      // rootPaths), so persist() above re-registered the SAME entry and
+      // unpersisting `prev` would evict the frame just cached: every
+      // same-plan slot was silently dead in any run that re-invoked its
+      // operator (the bench's warmup + timed protocol re-invokes every
+      // query). Comparing the analyzed plans instead misses what
+      // normalization erases (fresh CTE ids in a re-built WITH plan), and
+      // the slot dies the same way. When the plans match there is nothing
+      // extra to drop — the slot still holds exactly one entry.
       val samePlan = scala.util.Try(
-        prev.queryExecution.analyzed.sameResult(p.queryExecution.analyzed))
+        prev.queryExecution.normalized.sameResult(p.queryExecution.normalized))
         .getOrElse(false)
       if ((prev ne p) && !samePlan) {
         log.info(s"rotating cache slot '$slot': unpersisting the previous generation")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,23 +25,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stand-in for what a 1000-executor deployment would do with the
   * identical per-batch plan: MERGE into a keyed transactional table
   * (Delta/Iceberg) or hold the canonical row in transformWithState
-  * keyed state (StreamFsm shows that machinery). localCheckpoint is
-  * eager and truncates lineage each batch — without it the union chain
-  * grows one analyzer layer per micro-batch, unbounded over an
-  * unbounded stream.
+  * keyed state (StreamFsm shows that machinery). The [[BatchFold]]'s
+  * eager localCheckpoint truncates lineage each batch — without it the
+  * union chain grows one analyzer layer per micro-batch, unbounded over
+  * an unbounded stream.
   */
 object StreamAdmission {
 
   /** The canonical set as it evolves batch to batch. Thread-safe: the
     * merge runs on the streaming microbatch thread, readers on the test
     * or application thread. */
-  final class CanonicalState private[StreamAdmission] (s: SparkSession) {
+  final class CanonicalState private[graft] (s: SparkSession) {
 
-    @volatile private var canon: Option[DataFrame] = None
-
-    private[StreamAdmission] def merge(batchDocs: DataFrame): Unit = synchronized {
-      val feats = TextQueries.admissionFeatures(batchDocs)
-      val next = canon.map(_.unionByName(feats)).getOrElse(feats)
+    private[graft] val fold = new BatchFold(s, Seq("canon" -> { (prev, _, batch) =>
+      val feats = TextQueries.admissionFeatures(batch)
+      prev.get("canon").map(_.unionByName(feats)).getOrElse(feats)
         .groupBy(col("content_key"))
         .agg(min(struct(col("doc_id"), col("predicted_lang"), col("n_tokens"),
           col("distinct_ratio_milli"))).as("c"))
@@ -49,31 +47,22 @@ object StreamAdmission {
           col("c.predicted_lang").as("predicted_lang"),
           col("c.n_tokens").as("n_tokens"),
           col("c.distinct_ratio_milli").as("distinct_ratio_milli"))
-        .localCheckpoint()
-      canon.foreach(_.unpersist())
-      canon = Some(next)
-    }
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The admitted corpus as of the last completed micro-batch — the
       * t05 contract: canonical copies passing the quality gate. */
-    def admitted: DataFrame = {
-      val c = canon.getOrElse(s.emptyDataFrame)
-      if (canon.isEmpty) c
-      else c.filter(TextQueries.admissionGate)
-        .select(col("doc_id"), col("predicted_lang"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-    }
+    def admitted: DataFrame = fold.view(_("canon")
+      .filter(TextQueries.admissionGate)
+      .select(col("doc_id"), col("predicted_lang"), col("n_tokens"))
+      .orderBy(col("doc_id")))
   }
 
   /** Start the admission loop over a streaming (doc_id, text) frame.
     * Returns the running query and the live canonical state. */
   def start(docs: DataFrame): (StreamingQuery, CanonicalState) = {
-    require(docs.isStreaming, "StreamAdmission.start needs a streaming DataFrame")
     val state = new CanonicalState(docs.sparkSession)
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) => state.merge(batch) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamAdmission", docs), state)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -12,9 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * order key is associative and commutative, so the folded state equals
   * the one-shot batch compaction for ANY split of the log into batches.
   * n_changes is a plain count (counting state cannot dedup redelivered
-  * rows), so the fold is made redelivery-safe the same way as
-  * StreamHeavyHitters: batchId-idempotent — a replayed foreachBatch id is
-  * a no-op (asserted in StreamingSpec).
+  * rows), so the fold is made redelivery-safe by the [[BatchFold]]'s
+  * batchId guard: a replayed foreachBatch id is a no-op (asserted in
+  * StreamingSpec).
   *
   * State is O(entities), independent of log volume — the streaming answer
   * to "keep a 100 TB change log queryable as its current snapshot"
@@ -33,48 +33,22 @@ object StreamCdc {
           struct(col("ts"), col("event_id"))).as("last"),
         max(struct(col("ts"), col("event_id"))).as("ord"))
 
-  final class CdcState private[StreamCdc] (s: SparkSession) {
+  final class CdcState private[graft] (s: SparkSession) {
 
-    @volatile private var cur: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    private[graft] val fold = new BatchFold(s, Seq("state" -> { (prev, _, batch) =>
       val p = partials(batch)
-      val next = cur.map(_.unionByName(p)).getOrElse(p)
+      prev.get("state").map(_.unionByName(p)).getOrElse(p)
         .groupBy(col("user_id"))
         .agg(sum(col("n_changes")).as("n_changes"),
           max_by(col("last"), col("ord")).as("last"),
           max(col("ord")).as("ord"))
-        .localCheckpoint() // truncate the per-batch union lineage
-      cur.foreach(_.unpersist())
-      cur = Some(next)
-      lastBatchId = batchId
-    }
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The compacted snapshot in q65's report shape, as of the last
       * completed micro-batch. */
-    def snapshot: DataFrame = cur match {
-      case Some(state) => reportOf(state)
-      case None => s.emptyDataFrame
-    }
-
-    /** The raw fold state (user_id, n_changes, last, ord) — what a
-      * production deployment persists each batch (e.g. a parquet
-      * overwrite keyed by batchId) so a restart resumes instead of
-      * re-reading the log. */
-    def stateTable: Option[DataFrame] = cur
-
-    /** Resume from a persisted [[stateTable]]: because the fold is a
-      * plain monoid over that table, seeding it and replaying only the
-      * unprocessed batches yields the same snapshot as never restarting
-      * (asserted in StreamingSpec). */
-    private[graft] def rehydrate(saved: DataFrame, savedBatchId: Long): Unit =
-      synchronized {
-        require(cur.isEmpty, "rehydrate() must run before any merge")
-        cur = Some(saved.localCheckpoint())
-        lastBatchId = savedBatchId
-      }
+    def snapshot: DataFrame = fold.view(t => reportOf(t("state")))
   }
 
   /** q65's report columns from the fold state — shared shape with the
@@ -92,19 +66,10 @@ object StreamCdc {
   /** One-shot batch twin over a static change-log frame. */
   def compactBatch(events: DataFrame): DataFrame = reportOf(partials(events))
 
-  /** A fresh, empty fold state — pair with [[CdcState.rehydrate]] to
-    * resume from a persisted state table after a restart. */
-  private[graft] def emptyState(s: SparkSession): CdcState = new CdcState(s)
-
   /** Start the fold over a streaming change log with
     * (event_id, ts, user_id, event_type, value) columns. */
   def start(events: DataFrame): (StreamingQuery, CdcState) = {
-    require(events.isStreaming, "StreamCdc.start needs a streaming DataFrame")
     val state = new CdcState(events.sparkSession)
-    val q = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamCdc", events), state)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.DedupQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -33,28 +33,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pairs (StreamDedupSpec asserts this across splits, cross-batch
   * component merges, and a restart).
   *
-  * Durable by default ([[StreamIngest.start]]'s contract): [[start]]
-  * requires a `stateDir`, persists the parent table per committed batch
-  * through [[BatchStateStore]], and the same call rehydrates on restart.
+  * Durable by default: [[start]] requires a `stateDir`, and the
+  * [[BatchFold]] commits the parent table per batch and rehydrates it on
+  * restart, so the same call serves both.
   * State size is O(touched entities) — exactly the entities that ever
   * appeared in a pair; isolated docs label themselves at read time. */
 object StreamClusterLabels {
 
   final class ClusterState(s: SparkSession, stateDir: Option[String]) {
 
-    @volatile private var labels: Option[DataFrame] = None // (doc_id, cluster_id)
-    @volatile private var lastBatchId: Long = -1L
-    // one-generation deferred unpersist (StreamDomainGovernance's rule)
-    private var retired: Seq[DataFrame] = Nil
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    // the parent table: (doc_id, cluster_id)
+    private[graft] val fold = new BatchFold(s, Seq("labels" -> { (gen, _, batch) =>
       val pairs = batch.select(col("doc_a"), col("doc_b"))
-      val prev = labels.getOrElse {
+      val prev = gen.getOrElse("labels", {
         val e = s.emptyDataFrame
           .withColumn("doc_id", lit(0L)).withColumn("cluster_id", lit(0L))
         e.filter(lit(false))
-      }
+      })
       // 1. endpoints -> current roots (absent ids root at themselves)
       val rootOf = prev.select(col("doc_id"), col("cluster_id").as("root"))
       def rooted(side: String) = pairs.select(col(side).as("doc_id"))
@@ -82,20 +77,14 @@ object StreamClusterLabels {
       val fresh = endpoints.join(prev.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .join(mergeMap.withColumnRenamed("old_root", "root"), Seq("root"), "left")
         .select(col("doc_id"), coalesce(col("new_root"), col("root")).as("cluster_id"))
-      val next = relabeled.unionByName(fresh).localCheckpoint()
-      stateDir.foreach(d => BatchStateStore.commit(s, d, Seq("labels" -> next), batchId))
-      retired.foreach(_.unpersist())
-      retired = labels.toSeq
-      labels = Some(next)
-      lastBatchId = batchId
-    }
+      relabeled.unionByName(fresh)
+    }), stateDir)
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The raw parent table: (doc_id, cluster_id) for every entity that
       * ever appeared in a pair, as of the last completed micro-batch. */
-    def snapshot: DataFrame = synchronized { labels } match {
-      case Some(l) => l
-      case None => s.emptyDataFrame
-    }
+    def snapshot: DataFrame = fold.view(_("labels"))
 
     /** d08's report view over an arbitrary doc universe: every doc in
       * `docs` labeled — touched entities from the state, isolated docs
@@ -112,25 +101,13 @@ object StreamClusterLabels {
     }
 
     /** The last folded micro-batch id. */
-    def lastCommittedBatch: Long = synchronized { lastBatchId }
-
-    private[graft] def rehydrate(saved: DataFrame, savedBatchId: Long): Unit =
-      synchronized {
-        require(labels.isEmpty, "rehydrate must run on a fresh state")
-        labels = Some(saved.localCheckpoint())
-        lastBatchId = savedBatchId
-      }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Rehydrate a [[ClusterState]] from a `stateDir` written by a previous
-    * run — in any SparkSession ([[StreamIngest.load]]'s contract). */
-  def load(s: SparkSession, stateDir: String): ClusterState = {
-    val st = new ClusterState(s, Some(stateDir))
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      st.rehydrate(BatchStateStore.table(s, stateDir, "labels", bid), bid)
-    }
-    st
-  }
+    * run — in any SparkSession ([[BatchFold]]'s rehydration). */
+  def load(s: SparkSession, stateDir: String): ClusterState =
+    new ClusterState(s, Some(stateDir))
 
   /** THE FRONT DOOR — durable by default: state persists to `stateDir`
     * per batch and the same call rehydrates it on restart. `pairs` is the
@@ -146,13 +123,6 @@ object StreamClusterLabels {
     startWith(pairs, checkpoint, new ClusterState(pairs.sparkSession, None))
 
   private def startWith(pairs: DataFrame, checkpoint: String,
-      state: ClusterState): (StreamingQuery, ClusterState) = {
-    require(pairs.isStreaming, "StreamClusterLabels.start needs a streaming DataFrame")
-    val q = pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
-  }
+      state: ClusterState): (StreamingQuery, ClusterState) =
+    (state.fold.start("StreamClusterLabels", pairs, Some(checkpoint)), state)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -22,65 +22,38 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (StreamingSpec asserts this across micro-batch splits and a restart).
   * State size is O(langs) + the static heldout shingle set.
   *
-  * Durable by default ([[StreamIngest.start]]'s contract): the front-door
-  * [[start]] requires a `stateDir`, persists the fold per committed batch
-  * through [[BatchStateStore]], and the SAME call rehydrates it on
-  * restart. The heldout set is an ARGUMENT, not folded state — it is
-  * re-derived from the caller's frame on restart, and a persisted
-  * fingerprint (count + bit-xor of the shingle keys) fails loudly if a
-  * restart passes a different heldout than the one past decisions were
-  * made against (silently switching benchmarks would corrupt the fold). */
+  * Durable by default: the front-door [[start]] requires a `stateDir`,
+  * and the [[BatchFold]] commits the fold per batch and rehydrates it on
+  * restart, so the SAME call serves both. The heldout set is an ARGUMENT,
+  * not folded state — it is re-derived from the caller's frame on
+  * restart, and its fingerprint (count + bit-xor of the shingle keys),
+  * pinned to the fold, fails loudly if a restart passes a different
+  * heldout than the one past decisions were made against (silently
+  * switching benchmarks would corrupt the fold). */
 object StreamDecontaminate {
 
   final class DecontState(s: SparkSession, stateDir: Option[String],
       private[graft] val heldSh: DataFrame) {
 
-    // the heldout set is static, so its fingerprint is computed once —
-    // lazily, so ephemeral states (stateDir = None) that never persist it
-    // never pay the localCheckpoint job (the round-8 advisory)
-    private lazy val heldFp = heldFingerprint(heldSh).localCheckpoint()
-
-    @volatile private var stats: Option[DataFrame] = None // per-lang sums, unordered
-    @volatile private var lastBatchId: Long = -1L
-    // one-generation deferred unpersist (StreamDomainGovernance's rule):
-    // a report snapshotted against generation N stays executable while
-    // generation N+1 commits
-    private var retired: Seq[DataFrame] = Nil
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    // the heldout set is static: its fingerprint is pinned to the fold
+    private[graft] val fold = new BatchFold(s, Seq("stats" -> { (prev, _, batch) =>
+      // per-lang sums, unordered
       val bs = TextQueries.decontLangStats(TextQueries.docShingles(batch), heldSh)
-      val next = stats.map(_.unionByName(bs)).getOrElse(bs)
+      prev.get("stats").map(_.unionByName(bs)).getOrElse(bs)
         .groupBy(col("lang"))
         .agg(sum(col("n_train")).as("n_train"),
           sum(col("n_dropped")).as("n_dropped"),
           sum(col("tokens_dropped")).as("tokens_dropped"),
           sum(col("tokens_clean")).as("tokens_clean"))
-        .localCheckpoint()
-      stateDir.foreach(d => BatchStateStore.commit(s, d,
-        Seq("stats" -> next, "heldfp" -> heldFp), batchId))
-      retired.foreach(_.unpersist())
-      retired = stats.toSeq
-      stats = Some(next)
-      lastBatchId = batchId
-    }
+    }), stateDir, Some(heldFingerprint(heldSh)))
 
-    /** The t44 report as of the last completed micro-batch. Snapshots the
-      * state under the merge lock (no job runs while holding it). */
-    def report: DataFrame = synchronized { stats } match {
-      case Some(st) => st.orderBy(col("lang"))
-      case None => s.emptyDataFrame
-    }
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
+
+    /** The t44 report as of the last completed micro-batch. */
+    def report: DataFrame = fold.view(_("stats").orderBy(col("lang")))
 
     /** The last folded micro-batch id. */
-    def lastCommittedBatch: Long = synchronized { lastBatchId }
-
-    private[graft] def rehydrate(saved: DataFrame, savedBatchId: Long): Unit =
-      synchronized {
-        require(stats.isEmpty, "rehydrate must run on a fresh state")
-        stats = Some(saved.localCheckpoint())
-        lastBatchId = savedBatchId
-      }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Order-free fingerprint of a heldout shingle-key set: (count, bit-xor
@@ -90,7 +63,7 @@ object StreamDecontaminate {
   private def heldFingerprint(heldSh: DataFrame): DataFrame =
     heldSh.agg(count(lit(1)).as("n"), coalesce(bit_xor(col("g")), lit(0L)).as("x"))
 
-  private def heldShOf(heldout: DataFrame): DataFrame = {
+  private[graft] def heldShOf(heldout: DataFrame): DataFrame = {
     require(!heldout.isStreaming,
       "the heldout benchmark set is static input — pass a batch DataFrame")
     TextQueries.docShingles(heldout)
@@ -99,24 +72,11 @@ object StreamDecontaminate {
   }
 
   /** Rehydrate a [[DecontState]] from a `stateDir` written by a previous
-    * run — in any SparkSession ([[StreamIngest.load]]'s contract). Fails
+    * run — in any SparkSession ([[BatchFold]]'s rehydration). Fails
     * loudly if `heldout` is not the set the persisted fold was built
     * against. */
-  def load(s: SparkSession, heldout: DataFrame, stateDir: String): DecontState = {
-    val heldSh = heldShOf(heldout)
-    val st = new DecontState(s, Some(stateDir), heldSh)
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      val fpSaved = BatchStateStore.table(s, stateDir, "heldfp", bid).head()
-      val fpNow = heldFingerprint(heldSh).head()
-      require(fpSaved == fpNow,
-        s"stateDir $stateDir was folded against a different heldout set " +
-          s"(saved n=${fpSaved.getLong(0)} xor=${fpSaved.getLong(1)}, " +
-          s"given n=${fpNow.getLong(0)} xor=${fpNow.getLong(1)}); " +
-          "decontamination decisions are benchmark-specific — use a fresh stateDir")
-      st.rehydrate(BatchStateStore.table(s, stateDir, "stats", bid), bid)
-    }
-    st
-  }
+  def load(s: SparkSession, heldout: DataFrame, stateDir: String): DecontState =
+    new DecontState(s, Some(stateDir), heldShOf(heldout))
 
   /** THE FRONT DOOR — durable by default: state persists to `stateDir`
     * per batch and the same call rehydrates it on restart. `train` is the
@@ -133,13 +93,6 @@ object StreamDecontaminate {
       new DecontState(train.sparkSession, None, heldShOf(heldout)))
 
   private def startWith(train: DataFrame, checkpoint: String,
-      state: DecontState): (StreamingQuery, DecontState) = {
-    require(train.isStreaming, "StreamDecontaminate.start needs a streaming DataFrame")
-    val q = train.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
-  }
+      state: DecontState): (StreamingQuery, DecontState) =
+    (state.fold.start("StreamDecontaminate", train, Some(checkpoint)), state)
 }

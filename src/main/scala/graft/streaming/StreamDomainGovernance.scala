@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,84 +25,47 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * O(domains) computation, never a corpus re-aggregation. State size is
   * O(distinct canonical urls + domains), never O(stream length).
   *
-  * Durable by default ([[StreamIngest.start]]'s contract): the front-door
-  * [[start]] requires a `stateDir`, persists both tables per committed
-  * batch through [[BatchStateStore]], and the SAME call rehydrates them
-  * on restart — first start and restart are one code path. */
+  * Durable by default: the front-door [[start]] requires a `stateDir`,
+  * and the [[BatchFold]] commits both tables per batch and rehydrates
+  * them on restart — first start and restart are one code path. */
 object StreamDomainGovernance {
 
   final class GovState(s: SparkSession, stateDir: Option[String],
       budgetPct: Long) {
 
-    @volatile private var urls: Option[DataFrame] = None   // (curl, domain) distinct
-    @volatile private var counts: Option[DataFrame] = None // (domain, n_docs)
-    @volatile private var lastBatchId: Long = -1L
-    // Unpersist is deferred by ONE generation: a concurrent report that
-    // snapshotted generation N under the lock stays executable while
-    // generation N+1 commits (localCheckpointed frames cannot recompute
-    // once their blocks are dropped). Only generation N-1 is reclaimed.
-    private var retired: Seq[DataFrame] = Nil
+    private[graft] val fold = new BatchFold(s, Seq(
+      "urls" -> { (prev, _, batch) => // (curl, domain) distinct
+        val canon = TextQueries.canonicalUrls(batch)
+        prev.get("urls").map(_.unionByName(canon)).getOrElse(canon).distinct()
+      },
+      "counts" -> { (prev, _, batch) => // (domain, n_docs)
+        val batchCounts = TextQueries.canonicalUrls(batch).groupBy(col("domain"))
+          .agg(count(lit(1)).as("n_docs"))
+        prev.get("counts").map(_.unionByName(batchCounts)).getOrElse(batchCounts)
+          .groupBy(col("domain")).agg(sum(col("n_docs")).as("n_docs"))
+      }), stateDir)
 
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
-      val canon = TextQueries.canonicalUrls(batch)
-      val nextUrls = urls.map(_.unionByName(canon)).getOrElse(canon)
-        .distinct().localCheckpoint()
-      val batchCounts = canon.groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_docs"))
-      val nextCounts = counts.map(_.unionByName(batchCounts)).getOrElse(batchCounts)
-        .groupBy(col("domain")).agg(sum(col("n_docs")).as("n_docs"))
-        .localCheckpoint()
-      stateDir.foreach(d => BatchStateStore.commit(s, d,
-        Seq("urls" -> nextUrls, "counts" -> nextCounts), batchId))
-      retired.foreach(_.unpersist())
-      retired = (urls.toSeq ++ counts.toSeq)
-      urls = Some(nextUrls)
-      counts = Some(nextCounts)
-      lastBatchId = batchId
-    }
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
-    /** The t42 cap report as of the last completed micro-batch.
-      *
-      * Takes the same lock [[merge]] holds: a live monitoring read that
-      * raced an active micro-batch could otherwise pair batch-N urls with
-      * batch-N+1 counts, or reference a just-unpersisted localCheckpointed
-      * frame whose blocks are already gone. The lock is only held long
-      * enough to snapshot the two frame handles and the budget plan
-      * (lazy, no job runs under the lock). */
-    def report: DataFrame = synchronized { (urls, counts) } match {
-      case (Some(u), Some(c)) =>
-        val dom = u.groupBy(col("domain"))
-          .agg(countDistinct(col("curl")).as("n_urls"))
-          .join(c, Seq("domain"))
-          .select(col("domain"), col("n_docs"), col("n_urls"))
-        TextQueries.domainCapReport(dom, budgetPct)
-      case _ => s.emptyDataFrame
+    /** The t42 cap report as of the last completed micro-batch: urls and
+      * counts come from one generation. */
+    def report: DataFrame = fold.view { t =>
+      val dom = t("urls").groupBy(col("domain"))
+        .agg(countDistinct(col("curl")).as("n_urls"))
+        .join(t("counts"), Seq("domain"))
+        .select(col("domain"), col("n_docs"), col("n_urls"))
+      TextQueries.domainCapReport(dom, budgetPct)
     }
 
     /** The last folded micro-batch id. */
-    def lastCommittedBatch: Long = synchronized { lastBatchId }
-
-    private[graft] def rehydrate(savedUrls: DataFrame, savedCounts: DataFrame,
-        savedBatchId: Long): Unit = synchronized {
-      require(urls.isEmpty, "rehydrate must run on a fresh state")
-      urls = Some(savedUrls.localCheckpoint())
-      counts = Some(savedCounts.localCheckpoint())
-      lastBatchId = savedBatchId
-    }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Rehydrate a [[GovState]] from a `stateDir` written by a previous run
-    * — in any SparkSession ([[StreamIngest.load]]'s contract). */
+    * — in any SparkSession ([[BatchFold]]'s rehydration). */
   def load(s: SparkSession, stateDir: String,
-      budgetPct: Long = TextQueries.DomainBudgetPct): GovState = {
-    val st = new GovState(s, Some(stateDir), budgetPct)
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      st.rehydrate(BatchStateStore.table(s, stateDir, "urls", bid),
-        BatchStateStore.table(s, stateDir, "counts", bid), bid)
-    }
-    st
-  }
+      budgetPct: Long = TextQueries.DomainBudgetPct): GovState =
+    new GovState(s, Some(stateDir), budgetPct)
 
   /** THE FRONT DOOR — durable by default: state persists to `stateDir`
     * per batch and the same call rehydrates it on restart. */
@@ -116,13 +79,6 @@ object StreamDomainGovernance {
     startWith(urls, checkpoint, new GovState(urls.sparkSession, None, budgetPct))
 
   private def startWith(urls: DataFrame, checkpoint: String,
-      state: GovState): (StreamingQuery, GovState) = {
-    require(urls.isStreaming, "StreamDomainGovernance.start needs a streaming DataFrame")
-    val q = urls.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
-  }
+      state: GovState): (StreamingQuery, GovState) =
+    (state.fold.start("StreamDomainGovernance", urls, Some(checkpoint)), state)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{DedupQueries, TextQueries}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -36,8 +36,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     admission merge + monotone pair-set union) is associative and
   *     order-insensitive across any micro-batch split.
   *
-  * State (content-keyed canon table + pair set) lives behind the
-  * [[StreamIngest.IngestState]] seam with two backings:
+  * State (content-keyed canon table + pair set) is a [[BatchFold]]
+  * generation with two backings:
   *   - `stateDir` (THE DEFAULT — [[start]] requires one) — every committed
   *     micro-batch writes canon+pairs as
   *     parquet plus an atomically-renamed `_latest` marker (the
@@ -176,59 +176,28 @@ object StreamIngest {
 
   final class IngestState(s: SparkSession, stateDir: Option[String] = None) {
 
-    @volatile private var canon: Option[DataFrame] = None
-    @volatile private var pairs: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
+    private[graft] val fold = new BatchFold(s, Seq(
+      "canon" -> { (prev, _, batch) => foldCanon(prev.get("canon"), batch) },
+      "pairs" -> { (prev, next, _) =>
+        val admitted = next("canon").filter(TextQueries.admissionGate)
+        val newKeys = prev.get("canon") match {
+          case Some(pc) => admitted.select(col("content_key"))
+            .join(pc.select(col("content_key")), Seq("content_key"), "left_anti")
+          case None => admitted.select(col("content_key"))
+        }
+        val mined = minePairs(admitted, newKeys)
+        prev.get("pairs").map(_.unionByName(mined).distinct()).getOrElse(mined)
+      }), stateDir)
 
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
-      val prevKeys = canon.map(_.select(col("content_key")))
-      val nextCanon = foldCanon(canon, batch).localCheckpoint()
-      val admitted = nextCanon.filter(TextQueries.admissionGate)
-      val newKeys = prevKeys match {
-        case Some(pk) => admitted.select(col("content_key")).join(pk, Seq("content_key"), "left_anti")
-        case None => admitted.select(col("content_key"))
-      }
-      val mined = minePairs(admitted, newKeys)
-      val nextPairs = pairs.map(_.unionByName(mined).distinct()).getOrElse(mined)
-        .localCheckpoint()
-      stateDir.foreach(persistTo(_, nextCanon, nextPairs, batchId))
-      canon.foreach(_.unpersist()); pairs.foreach(_.unpersist())
-      canon = Some(nextCanon)
-      pairs = Some(nextPairs)
-      lastBatchId = batchId
-    }
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
-    /** Commit this batch's folded state to `dir` — the [[BatchStateStore]]
-      * protocol (per-batch parquet + atomic `_latest` marker). */
-    private def persistTo(dir: String, nextCanon: DataFrame, nextPairs: DataFrame,
-        batchId: Long): Unit =
-      BatchStateStore.commit(s, dir,
-        Seq("canon" -> nextCanon, "pairs" -> nextPairs), batchId)
-
-    /** The packed corpus as of the last completed micro-batch. */
-    def packed: DataFrame = canon match {
-      case Some(c) => packedOf(c, pairs.get)
-      case None => s.emptyDataFrame
-    }
-
-    /** Persisted-state seam for restart rehydration (the StreamCdc
-      * discipline: production persists canon+pairs transactionally per
-      * batch and reloads them here). */
-    def stateTables: Option[(DataFrame, DataFrame)] =
-      canon.map(c => (c, pairs.get))
+    /** The packed corpus as of the last completed micro-batch: canon and
+      * pairs come from one generation. */
+    def packed: DataFrame = fold.view(t => packedOf(t("canon"), t("pairs")))
 
     /** The last folded micro-batch id — persisted next to the state
       * tables so a restart can resume the retry discipline. */
-    def lastCommittedBatch: Long = lastBatchId
-
-    private[graft] def rehydrate(savedCanon: DataFrame, savedPairs: DataFrame,
-        savedBatchId: Long): Unit = synchronized {
-      require(canon.isEmpty, "rehydrate must run on a fresh state")
-      canon = Some(savedCanon.localCheckpoint())
-      pairs = Some(savedPairs.localCheckpoint())
-      lastBatchId = savedBatchId
-    }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Rehydrate an [[IngestState]] from a `stateDir` previously written by a
@@ -236,19 +205,13 @@ object StreamIngest {
     * fresh one after the original driver died: the only inputs are the
     * parquet tables and the `_latest` marker on disk. An empty/uninitialized
     * dir yields a fresh state (first start and restart share one call). */
-  def load(s: SparkSession, stateDir: String): IngestState = {
-    val st = new IngestState(s, Some(stateDir))
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      st.rehydrate(BatchStateStore.table(s, stateDir, "canon", bid),
-        BatchStateStore.table(s, stateDir, "pairs", bid), bid)
-    }
-    st
-  }
+  def load(s: SparkSession, stateDir: String): IngestState =
+    new IngestState(s, Some(stateDir))
 
   /** THE FRONT DOOR — durable by default. Start the composed ingestion
     * over a streaming (doc_id, text) frame with its fold state backed by
     * `stateDir` (per-batch parquet tables + atomic `_latest` marker, the
-    * [[BatchStateStore]] protocol). The SAME call is restart-safe by
+    * [[BatchFold]] commit). The SAME call is restart-safe by
     * construction: it first rehydrates whatever `stateDir` holds (an
     * empty/uninitialized dir yields a fresh state), so first start and
     * every later restart — including in a brand-new SparkSession after
@@ -274,13 +237,6 @@ object StreamIngest {
       prior.getOrElse(new IngestState(docs.sparkSession, None)))
 
   private def startWith(docs: DataFrame, checkpoint: String,
-      state: IngestState): (StreamingQuery, IngestState) = {
-    require(docs.isStreaming, "StreamIngest.start needs a streaming DataFrame")
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
-  }
+      state: IngestState): (StreamingQuery, IngestState) =
+    (state.fold.start("StreamIngest", docs, Some(checkpoint)), state)
 }

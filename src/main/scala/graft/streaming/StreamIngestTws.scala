@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{DedupQueries, TextQueries}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * path — state in the EXECUTOR state store, the same machinery the three
   * component twins ([[StreamAdmission]]/[[StreamDedup]]/[[StreamCdc]])
   * already use, instead of [[StreamIngest.IngestState]]'s driver-side
-  * batch fold.
+  * mining fold.
   *
   * One streaming query, two chained stateful operators (Spark 4 permits
   * chained transformWithState in append mode on the RocksDB provider —
@@ -38,7 +38,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * no mining, no joins against history: all heavy state (bucket
   * signatures, admission keys) lives in the checkpointed state store and
   * is restored by Spark on restart. Report tables persist per batch via
-  * [[BatchStateStore]] when `stateDir` is set (same commit protocol as
+  * the [[BatchFold]] commit when `stateDir` is set (same protocol as
   * [[StreamIngest]]).
   *
   * Scale notes: state partitions by (band, band_hash) — the batch
@@ -183,62 +183,38 @@ object StreamIngestTws {
     * joins; those live in the state store. */
   final class TwsIngestState(s: SparkSession, stateDir: Option[String] = None) {
 
-    @volatile private var canon: Option[DataFrame] = None // admitted groups only
-    @volatile private var pairs: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
+    private[graft] val fold = new BatchFold(s, Seq(
+      "canon" -> { (prev, _, events) => // admitted groups only
+        val canonB = events.filter(col("kind") === "canon")
+          .select(col("ck").as("content_key"), col("rep_id").as("doc_id"),
+            col("lang").as("predicted_lang"), col("n_tokens"))
+        prev.get("canon").map(_.unionByName(canonB)).getOrElse(canonB)
+          .groupBy(col("content_key"))
+          .agg(min(struct(col("doc_id"), col("predicted_lang"), col("n_tokens"))).as("c"))
+          .select(col("content_key"), col("c.doc_id").as("doc_id"),
+            col("c.predicted_lang").as("predicted_lang"),
+            col("c.n_tokens").as("n_tokens"))
+      },
+      "pairs" -> { (prev, _, events) =>
+        val pairB = events.filter(col("kind") === "pair")
+          .select(col("ck").as("ck_a"), col("ck2").as("ck_b"))
+        prev.get("pairs").map(_.unionByName(pairB)).getOrElse(pairB).distinct()
+      }), stateDir)
 
-    private[graft] def merge(events: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
-      val canonB = events.filter(col("kind") === "canon")
-        .select(col("ck").as("content_key"), col("rep_id").as("doc_id"),
-          col("lang").as("predicted_lang"), col("n_tokens"))
-      val nextCanon = canon.map(_.unionByName(canonB)).getOrElse(canonB)
-        .groupBy(col("content_key"))
-        .agg(min(struct(col("doc_id"), col("predicted_lang"), col("n_tokens"))).as("c"))
-        .select(col("content_key"), col("c.doc_id").as("doc_id"),
-          col("c.predicted_lang").as("predicted_lang"),
-          col("c.n_tokens").as("n_tokens"))
-        .localCheckpoint()
-      val pairB = events.filter(col("kind") === "pair")
-        .select(col("ck").as("ck_a"), col("ck2").as("ck_b"))
-      val nextPairs = pairs.map(_.unionByName(pairB)).getOrElse(pairB)
-        .distinct().localCheckpoint()
-      stateDir.foreach(d => BatchStateStore.commit(s, d,
-        Seq("canon" -> nextCanon, "pairs" -> nextPairs), batchId))
-      canon.foreach(_.unpersist()); pairs.foreach(_.unpersist())
-      canon = Some(nextCanon)
-      pairs = Some(nextPairs)
-      lastBatchId = batchId
-    }
+    private[graft] def merge(events: DataFrame, batchId: Long): Unit = fold.merge(events, batchId)
 
-    /** The packed corpus as of the last completed micro-batch. */
-    def packed: DataFrame = canon match {
-      case Some(c) => StreamIngest.packedOfAdmitted(c, pairs.get)
-      case None => s.emptyDataFrame
-    }
+    /** The packed corpus as of the last completed micro-batch: canon and
+      * pairs come from one generation. */
+    def packed: DataFrame = fold.view(t => StreamIngest.packedOfAdmitted(t("canon"), t("pairs")))
 
     /** The last folded micro-batch id. */
-    def lastCommittedBatch: Long = lastBatchId
-
-    private[graft] def rehydrate(savedCanon: DataFrame, savedPairs: DataFrame,
-        savedBatchId: Long): Unit = synchronized {
-      require(canon.isEmpty, "rehydrate must run on a fresh state")
-      canon = Some(savedCanon.localCheckpoint())
-      pairs = Some(savedPairs.localCheckpoint())
-      lastBatchId = savedBatchId
-    }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Rehydrate the report fold from a `stateDir` written by a previous run
-    * — in any SparkSession ([[StreamIngest.load]]'s contract). */
-  def load(s: SparkSession, stateDir: String): TwsIngestState = {
-    val st = new TwsIngestState(s, Some(stateDir))
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      st.rehydrate(BatchStateStore.table(s, stateDir, "canon", bid),
-        BatchStateStore.table(s, stateDir, "pairs", bid), bid)
-    }
-    st
-  }
+    * — in any SparkSession ([[BatchFold]]'s rehydration). */
+  def load(s: SparkSession, stateDir: String): TwsIngestState =
+    new TwsIngestState(s, Some(stateDir))
 
   /** THE FRONT DOOR — durable by default ([[StreamIngest.start]]'s
     * contract): the report fold persists to `stateDir` per batch and the
@@ -263,11 +239,6 @@ object StreamIngestTws {
   private def startWith(docs: DataFrame, checkpoint: String,
       state: TwsIngestState): (StreamingQuery, TwsIngestState) = {
     require(docs.isStreaming, "StreamIngestTws.start needs a streaming DataFrame")
-    val q = events(docs).toDF().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamIngestTws", events(docs).toDF(), Some(checkpoint)), state)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,35 +17,26 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Quantile reads use the ANSI percentile_disc definition (min value with
   * cumulative fraction >= p) over the histogram — a window over O(domain)
   * rows, never raw events. A retried foreachBatch id is a no-op
-  * (histogram counts cannot dedup redelivered rows — StreamCdc's batchId
-  * discipline).
+  * (histogram counts cannot dedup redelivered rows — the [[BatchFold]]'s
+  * redelivery guard).
   */
 object StreamQuantiles {
 
   private def histOf(batch: DataFrame): DataFrame =
     batch.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
 
-  final class QuantileState private[StreamQuantiles] (s: SparkSession) {
+  final class QuantileState private[graft] (s: SparkSession) {
 
-    @volatile private var cur: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    private[graft] val fold = new BatchFold(s, Seq("hist" -> { (prev, _, batch) =>
       val h = histOf(batch)
-      val next = cur.map(_.unionByName(h)).getOrElse(h)
+      prev.get("hist").map(_.unionByName(h)).getOrElse(h)
         .groupBy(col("c")).agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
-      cur.foreach(_.unpersist())
-      cur = Some(next)
-      lastBatchId = batchId
-    }
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** percentile_disc(p) for each requested p, as of the last batch. */
-    def quantiles(ps: Seq[Double]): DataFrame = cur match {
-      case Some(h) => quantilesOfHist(h, ps)
-      case None => s.emptyDataFrame
-    }
+    def quantiles(ps: Seq[Double]): DataFrame = fold.view(t => quantilesOfHist(t("hist"), ps))
   }
 
   /** ANSI percentile_disc reads over a (c, cnt) histogram. */
@@ -68,12 +59,7 @@ object StreamQuantiles {
 
   /** Start the fold over a streaming frame with one integer column `c`. */
   def start(values: DataFrame): (StreamingQuery, QuantileState) = {
-    require(values.isStreaming, "StreamQuantiles.start needs a streaming DataFrame")
     val state = new QuantileState(values.sparkSession)
-    val q = values.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamQuantiles", values), state)
   }
 }

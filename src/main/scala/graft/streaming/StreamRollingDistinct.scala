@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -22,32 +22,26 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamRollingDistinct {
 
-  final class WauState private[StreamRollingDistinct] (s: SparkSession) {
+  final class WauState private[graft] (s: SparkSession) {
 
-    @volatile private var cur: Option[DataFrame] = None
-
-    private[StreamRollingDistinct] def merge(batch: DataFrame): Unit = synchronized {
+    private[graft] val fold = new BatchFold(s, Seq("days" -> { (prev, _, batch) =>
       val perDay = batch
         .select(date_trunc("day", col("ts")).cast("date").as("day"), col("user_id"))
         .groupBy(col("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val next = cur.map(_.unionByName(perDay)).getOrElse(perDay)
+      prev.get("days").map(_.unionByName(perDay)).getOrElse(perDay)
         .groupBy(col("day"))
         .agg(hll_union_agg(col("sk")).as("sk"))
-        .localCheckpoint() // truncate the per-batch union lineage
-      cur.foreach(_.unpersist())
-      cur = Some(next)
-    }
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** Per-day sketches as of the last completed micro-batch. */
-    def daySketches: DataFrame = cur.getOrElse(s.emptyDataFrame)
+    def daySketches: DataFrame = fold.view(_("days"))
 
     /** q62's contract from the sketch state: (day, wau7) for observed
       * days, wau7 = estimate of the union of the trailing 7 day sketches. */
-    def wau7: DataFrame = cur match {
-      case Some(state) => wauFromDaySketches(state)
-      case None => s.emptyDataFrame
-    }
+    def wau7: DataFrame = fold.view(t => wauFromDaySketches(t("days")))
   }
 
   /** Trailing-7-day estimate from (day, sk) rows — shared by the streaming
@@ -72,12 +66,7 @@ object StreamRollingDistinct {
 
   /** Start the fold over a streaming frame with (ts, user_id) columns. */
   def start(events: DataFrame): (StreamingQuery, WauState) = {
-    require(events.isStreaming, "StreamRollingDistinct.start needs a streaming DataFrame")
     val state = new WauState(events.sparkSession)
-    val q = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) => state.merge(batch) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamRollingDistinct", events), state)
   }
 }

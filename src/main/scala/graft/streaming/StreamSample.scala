@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -20,51 +20,39 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * sample never grows with the stream. Membership is a pure function of
   * the doc id, so re-delivered documents from an at-least-once source
   * are dropped by id before re-ranking instead of double-counting.
-  * localCheckpoint truncates lineage each batch (the StreamAdmission
-  * discipline — without it the union chain grows per micro-batch,
-  * unbounded over an unbounded stream).
+  * The [[BatchFold]] localCheckpoints the sample each batch — without it
+  * the union chain grows per micro-batch, unbounded over an unbounded
+  * stream.
   */
 object StreamSample {
 
   /** The per-stratum sample as it evolves batch to batch. Thread-safe:
     * the merge runs on the streaming microbatch thread, readers on the
     * test or application thread. */
-  final class SampleState private[StreamSample] (s: SparkSession, k: Int) {
+  final class SampleState private[graft] (s: SparkSession, k: Int) {
 
-    @volatile private var cur: Option[DataFrame] = None
-
-    private[StreamSample] def merge(batchDocs: DataFrame): Unit = synchronized {
-      val batchK = TextQueries.bottomKSample(batchDocs, k)
-      val all = cur.map(_.unionByName(batchK)).getOrElse(batchK)
+    private[graft] val fold = new BatchFold(s, Seq("sample" -> { (prev, _, batch) =>
+      val batchK = TextQueries.bottomKSample(batch, k)
       val w = Window.partitionBy(col("lang")).orderBy(col("sample_hash"), col("doc_id"))
-      val next = all
+      prev.get("sample").map(_.unionByName(batchK)).getOrElse(batchK)
         .dropDuplicates("lang", "doc_id")
         .withColumn("r", row_number().over(w).cast("long"))
         .filter(col("r") <= k)
         .select(col("lang"), col("r").as("sample_rank"),
           col("doc_id"), col("sample_hash"))
-        .localCheckpoint()
-      cur.foreach(_.unpersist())
-      cur = Some(next)
-    }
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The sample as of the last completed micro-batch — t17's contract:
       * (lang, sample_rank [1..k], doc_id, sample_hash). */
-    def sample: DataFrame = cur match {
-      case Some(c) => c.orderBy(col("lang"), col("sample_rank"))
-      case None => s.emptyDataFrame
-    }
+    def sample: DataFrame = fold.view(_("sample").orderBy(col("lang"), col("sample_rank")))
   }
 
   /** Start the sampling loop over a streaming frame with (doc_id, lang)
     * columns. Returns the running query and the live sample state. */
   def start(docs: DataFrame, k: Int): (StreamingQuery, SampleState) = {
-    require(docs.isStreaming, "StreamSample.start needs a streaming DataFrame")
     val state = new SampleState(docs.sparkSession, k)
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) => state.merge(batch) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamSample", docs), state)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,7 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Late cross-batch events would need the event-time TWS machinery
   * (StreamFsm.fsmStreamEventTimeTws) instead; same as every APPLY CHANGES
   * implementation, in-order-per-key is the documented precondition.
-  * A retried foreachBatch id is a no-op (StreamCdc's batchId discipline).
+  * A retried foreachBatch id is a no-op (the [[BatchFold]]'s redelivery
+  * guard).
   */
 object StreamScd2 {
 
@@ -73,26 +74,17 @@ object StreamScd2 {
         col("n_events"))
   }
 
-  final class Scd2State private[StreamScd2] (s: SparkSession) {
+  final class Scd2State private[graft] (s: SparkSession) {
 
-    @volatile private var cur: Option[DataFrame] = None
-    @volatile private var lastBatchId: Long = -1L
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    private[graft] val fold = new BatchFold(s, Seq("runs" -> { (prev, _, batch) =>
       val r = runsOf(batch)
-      val next = normalize(cur.map(_.unionByName(r)).getOrElse(r))
-        .localCheckpoint() // truncate per-batch union lineage
-      cur.foreach(_.unpersist())
-      cur = Some(next)
-      lastBatchId = batchId
-    }
+      normalize(prev.get("runs").map(_.unionByName(r)).getOrElse(r))
+    }))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The history in q66's report shape as of the last micro-batch. */
-    def history: DataFrame = cur match {
-      case Some(state) => reportOf(state)
-      case None => s.emptyDataFrame
-    }
+    def history: DataFrame = fold.view(t => reportOf(t("runs")))
   }
 
   /** q66's output columns from a normalized run table. */
@@ -113,12 +105,7 @@ object StreamScd2 {
   /** Start the fold over a streaming change log with
     * (event_id, ts, user_id, props) columns. */
   def start(events: DataFrame): (StreamingQuery, Scd2State) = {
-    require(events.isStreaming, "StreamScd2.start needs a streaming DataFrame")
     val state = new Scd2State(events.sparkSession)
-    val q = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
+    (state.fold.start("StreamScd2", events), state)
   }
 }

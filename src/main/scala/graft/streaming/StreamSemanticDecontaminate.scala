@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{DedupQueries, SimilarityQueries}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -29,14 +29,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * prefix (StreamingSpec asserts this across micro-batch splits and a
   * restart). State size is O(langs) + the static heldout bucket frame.
   *
-  * Durable by default ([[StreamIngest.start]]'s contract): [[start]]
-  * requires a `stateDir`, persists the fold per committed batch through
-  * [[BatchStateStore]], and the SAME call rehydrates it on restart. The
-  * heldout set is an ARGUMENT, re-derived on restart, and a persisted
-  * fingerprint over its bucket rows (count + bit-xor of hashed
-  * (held_id, tbl, bucket) — sensitive to content AND geometry) fails
-  * loudly if a restart passes a different heldout than the one past
-  * decisions were made against. */
+  * Durable by default: [[start]] requires a `stateDir`, and the
+  * [[BatchFold]] commits the fold per batch and rehydrates it on restart,
+  * so the SAME call serves both. The heldout set is an ARGUMENT,
+  * re-derived on restart, and a fingerprint over its bucket rows
+  * (count + bit-xor of hashed (held_id, tbl, bucket) — sensitive to
+  * content AND geometry), pinned to the fold, fails loudly if a restart
+  * passes a different heldout than the one past decisions were made
+  * against. */
 object StreamSemanticDecontaminate {
 
   final class SemDecontState(s: SparkSession, stateDir: Option[String],
@@ -44,53 +44,29 @@ object StreamSemanticDecontaminate {
       tables: Int, ppt: Int, planes: Array[Array[Double]],
       minCosMilli: Long) {
 
-    // lazy: ephemeral states (stateDir = None) never persist the
-    // fingerprint, so they never pay its localCheckpoint job (the
-    // round-8 advisory on StreamDecontaminate's eager heldFp)
-    private lazy val heldFp = heldFingerprint(heldBk).localCheckpoint()
-
-    @volatile private var stats: Option[DataFrame] = None // per-lang sums, unordered
-    @volatile private var lastBatchId: Long = -1L
-    // one-generation deferred unpersist (StreamDomainGovernance's rule)
-    private var retired: Seq[DataFrame] = Nil
-
-    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return // redelivered micro-batch: no-op
+    // the heldout buckets are static: their fingerprint is pinned to the fold
+    private[graft] val fold = new BatchFold(s, Seq("stats" -> { (prev, _, batch) =>
+      // per-lang sums, unordered
       val train = batch.select(col("doc_id"), col("lang"),
         size(TextFns.tokens(col("text"))).cast("long").as("n_toks"),
         col("embedding"))
       val bs = SimilarityQueries.semDecontStats(
         train, heldBk, tables, ppt, planes, minCosMilli)
-      val next = stats.map(_.unionByName(bs)).getOrElse(bs)
+      prev.get("stats").map(_.unionByName(bs)).getOrElse(bs)
         .groupBy(col("lang"))
         .agg(sum(col("n_train")).as("n_train"),
           sum(col("n_dropped")).as("n_dropped"),
           sum(col("tokens_dropped")).as("tokens_dropped"),
           sum(col("tokens_clean")).as("tokens_clean"))
-        .localCheckpoint()
-      stateDir.foreach(d => BatchStateStore.commit(s, d,
-        Seq("stats" -> next, "heldfp" -> heldFp), batchId))
-      retired.foreach(_.unpersist())
-      retired = stats.toSeq
-      stats = Some(next)
-      lastBatchId = batchId
-    }
+    }), stateDir, Some(heldFingerprint(heldBk)))
+
+    private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
     /** The s22 report as of the last completed micro-batch. */
-    def report: DataFrame = synchronized { stats } match {
-      case Some(st) => st.orderBy(col("lang"))
-      case None => s.emptyDataFrame
-    }
+    def report: DataFrame = fold.view(_("stats").orderBy(col("lang")))
 
     /** The last folded micro-batch id. */
-    def lastCommittedBatch: Long = synchronized { lastBatchId }
-
-    private[graft] def rehydrate(saved: DataFrame, savedBatchId: Long): Unit =
-      synchronized {
-        require(stats.isEmpty, "rehydrate must run on a fresh state")
-        stats = Some(saved.localCheckpoint())
-        lastBatchId = savedBatchId
-      }
+    def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
   /** Order-free fingerprint of the heldout bucket frame: (row count,
@@ -104,7 +80,7 @@ object StreamSemanticDecontaminate {
 
   /** Build the static heldout state: bucket rows (geometry derived from
     * the heldout count) carrying the heldout embedding for the verify. */
-  private def heldStateOf(heldout: DataFrame): (DataFrame, Int, Int, Array[Array[Double]]) = {
+  private[graft] def heldStateOf(heldout: DataFrame): (DataFrame, Int, Int, Array[Array[Double]]) = {
     require(!heldout.isStreaming,
       "the heldout benchmark set is static input — pass a batch DataFrame")
     val held = heldout.select(col("doc_id"), col("embedding"))
@@ -122,23 +98,13 @@ object StreamSemanticDecontaminate {
   }
 
   /** Rehydrate a [[SemDecontState]] from a `stateDir` written by a
-    * previous run — in any SparkSession. Fails loudly if `heldout` is not
-    * the set (and geometry) the persisted fold was built against. */
+    * previous run — in any SparkSession ([[BatchFold]]'s rehydration).
+    * Fails loudly if `heldout` is not the set (and geometry) the persisted
+    * fold was built against. */
   def load(s: SparkSession, heldout: DataFrame, stateDir: String,
       minCosMilli: Long = 400L): SemDecontState = {
     val (heldBk, tables, ppt, planes) = heldStateOf(heldout)
-    val st = new SemDecontState(s, Some(stateDir), heldBk, tables, ppt, planes, minCosMilli)
-    BatchStateStore.committedBatch(s, stateDir).foreach { bid =>
-      val fpSaved = BatchStateStore.table(s, stateDir, "heldfp", bid).head()
-      val fpNow = heldFingerprint(heldBk).head()
-      require(fpSaved == fpNow,
-        s"stateDir $stateDir was folded against a different heldout set " +
-          s"(saved n=${fpSaved.getLong(0)} xor=${fpSaved.getLong(1)}, " +
-          s"given n=${fpNow.getLong(0)} xor=${fpNow.getLong(1)}); " +
-          "decontamination decisions are benchmark-specific — use a fresh stateDir")
-      st.rehydrate(BatchStateStore.table(s, stateDir, "stats", bid), bid)
-    }
-    st
+    new SemDecontState(s, Some(stateDir), heldBk, tables, ppt, planes, minCosMilli)
   }
 
   /** THE FRONT DOOR — durable by default: state persists to `stateDir`
@@ -158,14 +124,6 @@ object StreamSemanticDecontaminate {
   }
 
   private def startWith(train: DataFrame, checkpoint: String,
-      state: SemDecontState): (StreamingQuery, SemDecontState) = {
-    require(train.isStreaming,
-      "StreamSemanticDecontaminate.start needs a streaming DataFrame")
-    val q = train.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) => state.merge(batch, id) }
-      .start()
-    (q, state)
-  }
+      state: SemDecontState): (StreamingQuery, SemDecontState) =
+    (state.fold.start("StreamSemanticDecontaminate", train, Some(checkpoint)), state)
 }

@@ -54,6 +54,18 @@ class CheckpointIoSpec extends SparkSpec {
     } finally { rec.close(); Files.deleteIfExists(dump) }
   }
 
+  /** Runs the artifact-directory deletions earlier suites left pending, so
+    * they cannot land in a later [[processStarts]] window. A session that
+    * is dropped without being closed (a streaming query's clone, say)
+    * holds an ArtifactManager whose `java.lang.ref.Cleaner` forks
+    * `rm -rf /tmp/artifacts-<session>/<uuid>` on its own thread once a GC
+    * finds the session unreachable. Collects until a GC is followed by a
+    * quiet half second (at most ten rounds). */
+  private def drainArtifactCleanups(): Unit = {
+    var rounds = 1
+    while (processStarts { System.gc(); Thread.sleep(500) }.nonEmpty && rounds < 10) rounds += 1
+  }
+
   test("the session's file: file system is the in-process one") {
     val fs = FileSystem.get(new java.net.URI("file:///"), spark.sessionState.newHadoopConf())
     assert(fs.isInstanceOf[InProcessLocalFileSystem],
@@ -96,6 +108,7 @@ class CheckpointIoSpec extends SparkSpec {
       val source = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(in.getPath)
       var q: Option[StreamingQuery] = None
+      drainArtifactCleanups()
       try processStarts {
         q = Some(StreamFsm.fsmStreamAuto(keyed(source), false)(step).writeStream
           .option("checkpointLocation", ckpt)

@@ -440,6 +440,23 @@ class PlanQualitySpec extends SparkSpec {
     Seq(b, c).foreach(_.unpersist())
   }
 
+  test("OpCache slot survives re-persisting a re-built CTE plan (CacheManager's normalized key)") {
+    // each build of a WITH plan gets fresh CTE ids: the analyzed plans
+    // differ, the normalized ones (the key CacheManager matches on) do not,
+    // so the second persist re-registers the SAME entry and the slot must
+    // not unpersist it
+    import graft.operators.OpCache
+    import org.apache.spark.storage.StorageLevel
+    def cte = spark.sql("WITH t AS (SELECT id FROM range(10)) SELECT a.id FROM t a JOIN t b ON a.id = b.id")
+    val first = OpCache.persistRotating("opcache.cte.test", cte)
+    first.count()
+    val second = OpCache.persistRotating("opcache.cte.test", cte)
+    assert(second.count() === 10L)
+    assert(second.storageLevel !== StorageLevel.NONE,
+      "re-persisting an equal CTE plan evicted the slot's live entry")
+    second.unpersist()
+  }
+
   test("DSL typed path: each stage is a codegen'd MapElements/Filter, no MapPartitions, no kryo") {
     // a per-element ds.flatMap is a MapPartitions boundary outside
     // whole-stage codegen (~2x slower on dsl-load); the stages are kryo-typed

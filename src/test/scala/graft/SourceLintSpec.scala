@@ -45,4 +45,22 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"sessions built outside SessionConf.common: ${offenders.mkString(", ")}")
   }
+
+  private def streamingCode(pattern: String): Seq[String] =
+    SourceScan.mainSources.collect { case (file, lines) if file.startsWith("graft/streaming/") &&
+      SourceScan.code(lines).exists(_.contains(pattern)) => file }
+
+  test("no unpersist under graft/streaming: a checkpointed generation is freed by the ContextCleaner") {
+    val offenders = streamingCode(".unpersist(")
+    assert(offenders.isEmpty, s"unpersist in streaming code: ${offenders.mkString(", ")}")
+  }
+
+  test("foreachBatch under graft/streaming only in BatchFold and the twins without fold state") {
+    val allowed = Set("BatchFold", "StreamHeavyHitters", "StreamBind", "StreamDecontaminateApply")
+      .map(n => s"graft/streaming/$n.scala")
+    val users = streamingCode("foreachBatch")
+    val offenders = users.filterNot(allowed)
+    assert(offenders.isEmpty, s"foreachBatch outside BatchFold: ${offenders.mkString(", ")}")
+    assert(users.contains("graft/streaming/BatchFold.scala"), "scan found no foreachBatch")
+  }
 }

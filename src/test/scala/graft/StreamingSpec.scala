@@ -409,10 +409,10 @@ class StreamingSpec extends SparkSpec {
       assert(state.snapshot.collect().toSeq === before)
       // restart: rehydrate a fresh state from the persisted fold table and
       // replay only the unprocessed tail — same snapshot as never restarting
-      val halfway = StreamCdc.emptyState(spark)
+      val halfway = new StreamCdc.CdcState(spark)
       halfway.merge(rows.take(4).toDF("event_id", "ts", "user_id", "event_type", "value"), 0L)
-      val resumed = StreamCdc.emptyState(spark)
-      resumed.rehydrate(halfway.stateTable.get, 0L)
+      val resumed = new StreamCdc.CdcState(spark)
+      resumed.fold.rehydrate(halfway.fold.tables.get, 0L)
       resumed.merge(rows.drop(4).toDF("event_id", "ts", "user_id", "event_type", "value"), 1L)
       assert(resumed.snapshot.collect().toSeq === before)
     } finally q.stop()
@@ -1096,9 +1096,8 @@ class StreamingSpec extends SparkSpec {
     assert(st1.packed.collect().toSeq === halfStream)
     // restart: rehydrate a fresh state from the persisted tables, resume
     // the SAME checkpoint (committed offsets skip), feed the rest
-    val (savedCanon, savedPairs) = st1.stateTables.get
     val resumed = new StreamIngest.IngestState(spark)
-    resumed.rehydrate(savedCanon, savedPairs, st1.lastCommittedBatch)
+    resumed.fold.rehydrate(st1.fold.tables.get, st1.lastCommittedBatch)
     val (q2, st2) = StreamIngest.startEphemeral(
       ms.toDF().toDF("doc_id", "text"), ckpt, Some(resumed))
     try { ms.addData(secondHalf: _*); q2.processAllAvailable() } finally q2.stop()
@@ -1382,8 +1381,8 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("BatchStateStore disambiguates first-commit crash from marker loss") {
-    import graft.streaming.BatchStateStore
+  test("BatchFold's commit disambiguates first-commit crash from marker loss") {
+    import graft.streaming.BatchFold
     import org.apache.hadoop.fs.Path
     val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -1392,17 +1391,17 @@ class StreamingSpec extends SparkSpec {
     // fresh is safe (the source checkpoint redelivers the batch): None
     val crash = java.nio.file.Files.createTempDirectory("bss_crash").toString
     Seq((1L, "a")).toDF("k", "v").write.parquet(s"$crash/urls_0")
-    assert(BatchStateStore.committedBatch(spark, crash) === None)
+    assert(BatchFold.committedBatch(spark, crash) === None)
 
     // normal committed dir reads back its batch id
     val ok = java.nio.file.Files.createTempDirectory("bss_ok").toString
-    BatchStateStore.commit(spark, ok, Seq("urls" -> Seq((1L, "a")).toDF("k", "v")), 3L)
-    assert(BatchStateStore.committedBatch(spark, ok) === Some(3L))
+    BatchFold.commit(spark, ok, Seq("urls" -> Seq((1L, "a")).toDF("k", "v")), 3L)
+    assert(BatchFold.committedBatch(spark, ok) === Some(3L))
 
     // marker loss over committed state: _committed_once survives, so a
     // missing _latest is unrecoverable data loss — fail loudly
     fs.delete(new Path(ok, "_latest"), false)
-    val e = intercept[IllegalStateException](BatchStateStore.committedBatch(spark, ok))
+    val e = intercept[IllegalStateException](BatchFold.committedBatch(spark, ok))
     assert(e.getMessage.contains("refusing to rehydrate"))
   }
 }
