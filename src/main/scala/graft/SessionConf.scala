@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session configuration every graft entry point that runs a
-  * query shares: Bench, Verify, Profile, PlanDump and the test session
-  * (SourceLintSpec fails on any other `SparkSession.builder()` in
-  * `src/main`; ScaleProbe, which only writes data files, is the one
-  * exception). Factored so a config that changes how plans execute —
-  * notably the AQE cached-plan output partitioning rule — can never drift
-  * between the bench and the other harnesses: round 9 added it to Bench
-  * only, so Profile/PlanDump captured plans the bench did not actually run
-  * (the round-9 advisory).
+  * query shares: Bench, Verify and the test session (SourceLintSpec
+  * fails on any other `SparkSession.builder()` in `src/main`; ScaleProbe,
+  * which only writes data files, is the one exception). Factored so a
+  * config that changes how plans execute — notably the AQE cached-plan
+  * output partitioning rule — can never drift between the bench and the
+  * other harnesses: round 9 added it to Bench only, so plans captured
+  * outside Bench were not the plans the bench ran (the round-9
+  * advisory).
   *
   * Local checkpoint I/O runs in-process: Spark's FileSystem-based
   * checkpoint manager replaces Hadoop FileContext's `RawLocalFs` (which

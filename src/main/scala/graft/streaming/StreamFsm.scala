@@ -11,11 +11,16 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * Mealy/FSM form: an explicit serializable state `S` plus a transition
   * `(S, A) => (S, Seq[B])` — exactly what [[graft.dsl.SP.fsm]] takes, and
   * what every reference state machine (`tests/events.rs`,
-  * `examples/pelican.rs`) is written as. One `flatMapGroupsWithState`
-  * instance per key: state-store-backed, exactly-once under checkpointing,
-  * parallel across keys — the streaming twin of the batch
-  * `flatMapGroups` fallback (same transition function, same per-key output
-  * sequence).
+  * `examples/pelican.rs`) is written as. Two runners, one per-key fold
+  * (`foldKey`: seq order, step, number each emission from
+  * [[FsmState]]`.emitted`): [[fsmStream]] on `flatMapGroupsWithState`,
+  * and ONE `transformWithState` processor (`MealyProcessor`) behind
+  * [[fsmStreamTws]], [[fsmStreamWithTimersTws]] and
+  * [[fsmStreamEventTimeTws]], which differ only in how a row becomes the
+  * transition's input and how a requested timer becomes an instant.
+  * State-store-backed, exactly-once under checkpointing, parallel across
+  * keys — the streaming twin of the batch `flatMapGroups` fallback (same
+  * transition function, same per-key output sequence).
   *
   * Timeout support covers the reference's `EmitTimeoutAfter` feedback
   * pattern (`examples/pelican.rs:323-325,346-367`): instead of an external
@@ -55,21 +60,26 @@ object StreamFsm {
       .flatMapGroupsWithState[FsmState[S], Keyed[B]](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, it: Iterator[Keyed[A]], state: GroupState[FsmState[S]]) =>
-          val st0 = state.getOption.getOrElse(FsmState(init, 0L))
-          var s = st0.userState
-          var emitted = st0.emitted
-          val out = it.toVector.sortBy(_.seq).flatMap { ka =>
-            val (s2, bs) = t(s, ka.value)
-            s = s2
-            bs.map { b =>
-              val kb = Keyed(key, emitted, b)
-              emitted += 1
-              kb
-            }
-          }
-          state.update(FsmState(s, emitted))
-          out.iterator
+          val (st, out) = foldKey(key, state.getOption.getOrElse(FsmState(init, 0L)), it)(
+            _.seq)((s, ka) => t(s, ka.value))
+          state.update(st)
+          out
       }
+
+  /** The per-key Mealy fold every runner shares: visit `rows` in `seq`
+    * order, `step` the machine, and number each emission from the
+    * state's running `emitted` count. */
+  private def foldKey[S, R, B](key: Long, st0: FsmState[S], rows: Iterator[R])(
+      seq: R => Long)(step: (S, R) => (S, Seq[B])): (FsmState[S], Iterator[Keyed[B]]) = {
+    var s = st0.userState
+    var emitted = st0.emitted
+    val out = rows.toVector.sortBy(seq).flatMap { r =>
+      val (s2, bs) = step(s, r)
+      s = s2
+      bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
+    }
+    (FsmState(s, emitted), out.iterator)
+  }
 
   /** Mealy machine on the Spark 4 `transformWithState` operator (state-store
     * v2): `ValueState` holds the FSM state; requires the RocksDB state store
@@ -87,7 +97,7 @@ object StreamFsm {
     }
     ds.groupByKey(_.key)
       .transformWithState(
-        new TimerMealyProcessor[S, A, B](init, untimed, encState),
+        new MealyProcessor[S, Keyed[A], A, B](init, _.seq, _.value, untimed, afterDelay, encState),
         TimeMode.None(), OutputMode.Append(), encOut)
   }
 
@@ -117,49 +127,9 @@ object StreamFsm {
       encOut: Encoder[Keyed[B]]): Dataset[Keyed[B]] =
     ds.groupByKey(_.key)
       .transformWithState(
-        new EventTimeMealyProcessor[S, A, B](init, t, encState),
+        new MealyProcessor[S, KeyedTs[A], (A, Long), B](
+          init, _.seq, r => (r.value, r.ts.getTime), t, atInstant, encState),
         TimeMode.EventTime(), OutputMode.Append(), encOut)
-
-  private final class EventTimeMealyProcessor[S, A, B](
-      zero: S, t: (S, Option[(A, Long)]) => (S, Seq[B], Option[Long]),
-      encState: Encoder[FsmState[S]])
-      extends StatefulProcessor[Long, KeyedTs[A], Keyed[B]] {
-    @transient private var st: ValueState[FsmState[S]] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState("fsm", encState, TTLConfig.NONE)
-
-    private def arm(atMs: Option[Long]): Unit =
-      atMs.foreach { at =>
-        getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
-        getHandle.registerTimer(at)
-      }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[KeyedTs[A]], tv: TimerValues): Iterator[Keyed[B]] = {
-      val st0 = Option(st.get()).getOrElse(FsmState(zero, 0L))
-      var s = st0.userState
-      var emitted = st0.emitted
-      val out = rows.toVector.sortBy(_.seq).flatMap { ka =>
-        val (s2, bs, armAt) = t(s, Some((ka.value, ka.ts.getTime)))
-        s = s2
-        arm(armAt)
-        bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
-      }
-      st.update(FsmState(s, emitted))
-      out.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: Long, tv: TimerValues, info: ExpiredTimerInfo): Iterator[Keyed[B]] = {
-      val st0 = Option(st.get()).getOrElse(FsmState(zero, 0L))
-      val (s2, bs, armAt) = t(st0.userState, None)
-      var emitted = st0.emitted
-      val out = bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
-      st.update(FsmState(s2, emitted))
-      arm(armAt)
-      out.iterator
-    }
-  }
 
   /** Timer-driven FSM on `transformWithState` — the faithful carrier of the
     * reference's `EmitTimeoutAfter` capability (`examples/pelican.rs:
@@ -183,48 +153,51 @@ object StreamFsm {
       encOut: Encoder[Keyed[B]]): Dataset[Keyed[B]] =
     ds.groupByKey(_.key)
       .transformWithState(
-        new TimerMealyProcessor[S, A, B](init, t, encState),
+        new MealyProcessor[S, Keyed[A], A, B](init, _.seq, _.value, t, afterDelay, encState),
         TimeMode.ProcessingTime(), OutputMode.Append(), encOut)
 
-  private final class TimerMealyProcessor[S, A, B](
-      zero: S, t: (S, Option[A]) => (S, Seq[B], Option[Long]),
+  /** A requested timer as an absolute instant: `delayMs` past the
+    * processing-time clock, or the event-time instant itself. */
+  private val afterDelay: (TimerValues, Long) => Long =
+    (tv, delayMs) => tv.getCurrentProcessingTimeInMs + delayMs
+  private val atInstant: (TimerValues, Long) => Long = (_, atMs) => atMs
+
+  /** The one Mealy `StatefulProcessor`: `ValueState` "fsm" holds the
+    * [[FsmState]]; a row steps the transition with `Some(input(row))`, an
+    * expired timer with `None`. A requested timer replaces any pending one
+    * at `instant(tv, requested)` — called only when a transition requests
+    * a timer, so an untimed machine never reads the processing-time clock. */
+  private final class MealyProcessor[S, R, X, B](
+      zero: S, seq: R => Long, input: R => X,
+      t: (S, Option[X]) => (S, Seq[B], Option[Long]),
+      instant: (TimerValues, Long) => Long,
       encState: Encoder[FsmState[S]])
-      extends StatefulProcessor[Long, Keyed[A], Keyed[B]] {
+      extends StatefulProcessor[Long, R, Keyed[B]] {
     @transient private var st: ValueState[FsmState[S]] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState("fsm", encState, TTLConfig.NONE)
 
-    // `nowMs` by name: an untimed machine never arms, so never reads the clock
-    private def arm(nowMs: => Long, delayMs: Option[Long]): Unit =
-      delayMs.foreach { d =>
-        getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
-        getHandle.registerTimer(nowMs + d)
+    private def run[T](key: Long, rows: Iterator[T], tv: TimerValues)(seqOf: T => Long)(
+        x: T => Option[X]): Iterator[Keyed[B]] = {
+      val (st1, out) = foldKey(key, Option(st.get()).getOrElse(FsmState(zero, 0L)), rows)(seqOf) {
+        (s, r) =>
+          val (s2, bs, timer) = t(s, x(r))
+          timer.foreach { at =>
+            getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
+            getHandle.registerTimer(instant(tv, at))
+          }
+          (s2, bs)
       }
+      st.update(st1)
+      out
+    }
 
     override def handleInputRows(
-        key: Long, rows: Iterator[Keyed[A]], tv: TimerValues): Iterator[Keyed[B]] = {
-      val st0 = Option(st.get()).getOrElse(FsmState(zero, 0L))
-      var s = st0.userState
-      var emitted = st0.emitted
-      val out = rows.toVector.sortBy(_.seq).flatMap { ka =>
-        val (s2, bs, armMs) = t(s, Some(ka.value))
-        s = s2
-        arm(tv.getCurrentProcessingTimeInMs, armMs)
-        bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
-      }
-      st.update(FsmState(s, emitted))
-      out.iterator
-    }
+        key: Long, rows: Iterator[R], tv: TimerValues): Iterator[Keyed[B]] =
+      run(key, rows, tv)(seq)(r => Some(input(r)))
 
     override def handleExpiredTimer(
-        key: Long, tv: TimerValues, info: ExpiredTimerInfo): Iterator[Keyed[B]] = {
-      val st0 = Option(st.get()).getOrElse(FsmState(zero, 0L))
-      val (s2, bs, armMs) = t(st0.userState, None)
-      var emitted = st0.emitted
-      val out = bs.map { b => val kb = Keyed(key, emitted, b); emitted += 1; kb }
-      st.update(FsmState(s2, emitted))
-      arm(tv.getCurrentProcessingTimeInMs, armMs)
-      out.iterator
-    }
+        key: Long, tv: TimerValues, info: ExpiredTimerInfo): Iterator[Keyed[B]] =
+      run(key, Iterator.single(()), tv)(_ => 0L)(_ => None)
   }
 }

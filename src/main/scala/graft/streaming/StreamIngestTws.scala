@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{DedupQueries, TextQueries}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** The composed ingestion pipeline ([[StreamIngest]]'s semantics: t05
   * admission -> d03 near-dup -> t08 packing) on the transformWithState
@@ -25,12 +25,13 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   *     doc_id only shrinks the rep: another `canon` event, no re-mining.
   *  2. NEAR-DUP — `admit` events explode into LSH band rows (the batch
   *     d03 kernels: [[DedupQueries.shinglesOfText]]/minhashSigOf/
-  *     bandHashOf) keyed by (band, band_hash); a ListState holds each
-  *     bucket's history and a colliding pair is emitted only at its
-  *     MINIMAL shared band after the exact-jaccard >= 0.8 verify —
-  *     [[StreamDedup]]'s exactly-once argument, verbatim, at content-key
-  *     granularity. `canon` events pass through stage 2 untouched (band
-  *     -1, spread across buckets by ck hash, no state touched).
+  *     bandHashOf) keyed by (band, band_hash); the shared bucket
+  *     processor [[BandBuckets]] (the one [[StreamDedup]]'s twins run on)
+  *     holds each bucket's history in a ListState and emits a colliding
+  *     pair only at its MINIMAL shared band after the exact-jaccard >= 0.8
+  *     verify, at content-key granularity. `canon` events pass through
+  *     stage 2 untouched (band -1, spread across buckets by ck hash, no
+  *     state touched) before the bucket processor runs.
   *
   * The foreachBatch sink only FOLDS emitted events into the two report
   * tables (admitted canon: min-rep upsert; pairs: monotone union) and
@@ -104,77 +105,54 @@ object StreamIngestTws {
     }
   }
 
-  private final class CkBucketProc
-      extends StatefulProcessor[(Int, Long), BandedCk, IngestEvent] {
-    @transient private var seen: ListState[StoredCk] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState("seen", Encoders.product[StoredCk], TTLConfig.NONE)
-
+  /** Stage 2's buckets: [[BandBuckets]] at content-key granularity, after
+    * the canon passthrough (band -1: stateless, no bucket state touched). */
+  private final class CkBuckets
+      extends BandBuckets[Long, BandedCk, StoredCk, String, IngestEvent](
+        r => StoredCk(r.ck, DedupQueries.minhashSigOf(r.sh).toSeq, r.sh), _.ck,
+        (prev, e) => StreamDedup.firstSharedMinhashBand(prev.sig, e.sig),
+        { (prev, e) =>
+          val j = DedupQueries.jaccardMilliOf(prev.sh, e.sh)
+          val (a, b) = if (prev.ck < e.ck) (prev.ck, e.ck) else (e.ck, prev.ck)
+          Option.when(j >= 800)(IngestEvent("pair", a, b, j, "", 0L, ""))
+        },
+        Encoders.product[StoredCk]) {
     override def handleInputRows(key: (Int, Long), rows: Iterator[BandedCk],
-        tv: TimerValues): Iterator[IngestEvent] = {
-      if (key._1 < 0) // canon passthrough: stateless
+        tv: TimerValues): Iterator[IngestEvent] =
+      if (key._1 < 0)
         rows.toVector.map(r =>
           IngestEvent("canon", r.ck, "", r.repId, r.lang, r.nTokens, "")).iterator
-      else {
-        val existing = scala.collection.mutable.ArrayBuffer.empty[StoredCk]
-        val it = seen.get()
-        while (it.hasNext) existing += it.next()
-        val out = Vector.newBuilder[IngestEvent]
-        // ck order within the batch: deterministic under any micro-batch split
-        rows.toVector.sortBy(_.ck).foreach { r =>
-          if (!existing.exists(_.ck == r.ck)) { // redelivery guard
-            val sigR = DedupQueries.minhashSigOf(r.sh)
-            existing.foreach { e =>
-              // emit only at the pair's minimal shared band (StreamDedup's
-              // exactly-once argument at content-key granularity)
-              var minBand = -1
-              var b = 0
-              while (b < DedupQueries.numBands && minBand < 0) {
-                if (DedupQueries.bandHashOf(b, e.sig.toArray) ==
-                    DedupQueries.bandHashOf(b, sigR))
-                  minBand = b
-                b += 1
-              }
-              if (minBand == key._1) {
-                val j = DedupQueries.jaccardMilliOf(e.sh, r.sh)
-                if (j >= 800) {
-                  val (a, b2) = if (e.ck < r.ck) (e.ck, r.ck) else (r.ck, e.ck)
-                  out += IngestEvent("pair", a, b2, j, "", 0L, "")
-                }
-              }
-            }
-            val stored = StoredCk(r.ck, sigR.toSeq, r.sh)
-            existing += stored
-            seen.appendValue(stored)
-          }
-        }
-        out.result().iterator
-      }
-    }
+      else super.handleInputRows(key, rows, tv)
   }
 
   /** The chained-TWS event stream over a streaming (doc_id, text) frame. */
   private def events(docs: DataFrame): Dataset[IngestEvent] = {
     val s = docs.sparkSession
     import s.implicits._
-    TextQueries.admissionFeaturesWithText(docs)
+    nearDupStage(TextQueries.admissionFeaturesWithText(docs)
       .as[DocIn]
       .groupByKey(_.content_key)
       .transformWithState(new AdmissionProc, TimeMode.None(), OutputMode.Append(),
-        Encoders.product[IngestEvent])
-      .flatMap { e =>
-        if (e.kind == "admit") {
-          val sh = DedupQueries.shinglesOfText(e.text)
-          val sig = DedupQueries.minhashSigOf(sh)
-          (0 until DedupQueries.numBands).iterator.map(b =>
-            BandedCk(b, DedupQueries.bandHashOf(b, sig), e.ck, sh, "admit", 0L, "", 0L))
-        } else
-          Iterator.single(BandedCk(-1, e.ck.hashCode.toLong, e.ck, Nil,
-            e.kind, e.rep_id, e.lang, e.n_tokens))
-      }
+        Encoders.product[IngestEvent]))
+  }
+
+  /** Stage 2 over stage-1 events: an `admit` event explodes into its LSH
+    * band rows, a `canon` event passes through; emits `canon` and `pair`. */
+  private[graft] def nearDupStage(stage1: Dataset[IngestEvent]): Dataset[IngestEvent] = {
+    val s = stage1.sparkSession
+    import s.implicits._
+    stage1.flatMap { e =>
+      if (e.kind == "admit") {
+        val sh = DedupQueries.shinglesOfText(e.text)
+        val sig = DedupQueries.minhashSigOf(sh)
+        (0 until DedupQueries.numBands).iterator.map(b =>
+          BandedCk(b, DedupQueries.bandHashOf(b, sig), e.ck, sh, "admit", 0L, "", 0L))
+      } else
+        Iterator.single(BandedCk(-1, e.ck.hashCode.toLong, e.ck, Nil,
+          e.kind, e.rep_id, e.lang, e.n_tokens))
+    }
       .groupByKey(r => (r.band, r.bh))
-      .transformWithState(new CkBucketProc, TimeMode.None(), OutputMode.Append(),
+      .transformWithState(new CkBuckets, TimeMode.None(), OutputMode.Append(),
         Encoders.product[IngestEvent])
   }
 

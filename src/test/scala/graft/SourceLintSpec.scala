@@ -63,4 +63,13 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"foreachBatch outside BatchFold: ${offenders.mkString(", ")}")
     assert(users.contains("graft/streaming/BatchFold.scala"), "scan found no foreachBatch")
   }
+
+  test("one StatefulProcessor per state shape under graft/streaming: BandBuckets, StreamFsm, AdmissionProc") {
+    val allowed = Set("BandBuckets", "StreamFsm", "StreamIngestTws")
+      .map(n => s"graft/streaming/$n.scala" -> 1).toMap
+    val counts = SourceScan.mainSources.collect { case (file, lines) if file.startsWith("graft/streaming/") =>
+      file -> SourceScan.code(lines).count(_.contains("extends StatefulProcessor"))
+    }.filter(_._2 > 0).toMap
+    assert(counts === allowed, "StatefulProcessor subclasses per file")
+  }
 }

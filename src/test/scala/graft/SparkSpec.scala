@@ -39,6 +39,22 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = "/root/testdata/sf0.001"
 
+  /** The state store provider `transformWithState` needs. */
+  val RocksDbProvider: String =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with the session on the RocksDB state store provider. */
+  def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, RocksDbProvider)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Run `body` under a job listener and a query-execution listener. */
   def trace[T](body: => T): (T, Traced) = {
     val jobs = new AtomicInteger(0)

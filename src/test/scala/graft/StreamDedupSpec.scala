@@ -12,20 +12,6 @@ class StreamDedupSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streaming near-dup pairs equal batch d03 over the same corpus") {
     withRocksDb {
       implicit val sq = spark.sqlContext

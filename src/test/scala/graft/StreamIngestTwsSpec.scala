@@ -16,19 +16,6 @@ class StreamIngestTwsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDbProvider)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("JVM shingle kernel == batch Column kernel (real documents + adversarial whitespace)") {
     val real = Tables.documents(spark, sf).select($"doc_id", $"text")
     val edge = Seq((900001L, ""), (900002L, "   "), (900003L, "a\tb\nc  d"),

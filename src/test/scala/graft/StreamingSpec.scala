@@ -99,20 +99,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("transformWithState FSM over MemoryStream equals batch r05 result") {
     withRocksDb {
       implicit val sq = spark.sqlContext
