@@ -31,7 +31,7 @@ object Bench {
       .config("spark.local.dir", localDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: session init, codegen JIT, parquet footers
+    // untimed warmup: session init, codegen JIT, the first scan of each table
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
     // Constant-work host-drift control: a fixed CPU-bound job over
     // generated data — independent of SF, the query set, and any code in

@@ -137,7 +137,7 @@ object LayoutQueries {
         zOrderWrite(
           Tables.lineitem(s, d).select($"l_partkey", $"l_suppkey", $"l_extendedprice"),
           "l_partkey", "l_suppkey", files = 16, path = path)
-        s.read.parquet(path)
+        Tables.parquet(s, path)
           .filter($"l_partkey".between(100, 299) && $"l_suppkey".between(10, 29))
           .groupBy($"l_suppkey")
           .agg(count(lit(1)).as("n"), cents($"l_extendedprice").as("rev_c"))
@@ -225,7 +225,7 @@ object LayoutQueries {
     }
     val in = dataFiles(inDir)
     val bytes = math.max(in.map(_.getLen).sum, 1L)
-    val df = spark.read.parquet(inDir)
+    val df = Tables.parquet(spark, inDir)
     val rows = math.max(df.count(), 1L)
     val maxRecords = math.max(1L, targetBytes * rows / bytes)
     val nTasks = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt

@@ -191,5 +191,5 @@ private[graft] object BatchFold {
 
   /** Read table `name` of the committed batch. */
   def table(s: SparkSession, dir: String, name: String, batchId: Long): DataFrame =
-    s.read.parquet(s"$dir/${name}_$batchId")
+    graft.Tables.parquet(s, s"$dir/${name}_$batchId")
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.functions.VectorFns
 import graft.operators.{DedupQueries, SimilarityQueries, TextQueries}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -78,7 +79,7 @@ object StreamDecontaminateApply {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_"))
       .map(_.getPath.toString)
     if (dirs.isEmpty) s.emptyDataFrame
-    else s.read.parquet(dirs.toIndexedSeq: _*)
+    else Tables.parquet(s, dirs.toIndexedSeq: _*)
   }
 
   /** Start the gate: `train` is the streaming (doc_id, text, lang,

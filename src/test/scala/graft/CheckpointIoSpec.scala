@@ -137,6 +137,26 @@ class CheckpointIoSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
+  test("a persisted frame is planned in the session itself, not in a clone that forks rm -rf when dropped") {
+    // with canChangeCachedPlanOutputPartitioning and autoBucketedScan both
+    // on, CacheManager planned every cached frame in a fresh clone of the
+    // session; each dropped clone forked one `rm -rf` of its artifact
+    // directory once a GC found it (and AQE pool threads kept it alive up
+    // to a minute, so the fork landed in whatever ran then)
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count().persist()
+    try {
+      df.count()
+      val cached = df.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+        .getOrElse(fail("the frame is not in the cache")).cacheBuilder.cachedPlan
+      cached match {
+        case a: AdaptiveSparkPlanExec => assert(a.context.session eq spark, "cached plan runs in a cloned session")
+        case other => fail(s"expected an adaptive cached plan, got ${other.nodeName}")
+      }
+    } finally df.unpersist()
+  }
+
   test("permission mapping: 0644 and 0755 map to POSIX sets, the sticky bit delegates") {
     def posix(mode: Int) =
       InProcessLocalFileSystem.posix(new FsPermission(mode.toShort)).map(PosixFilePermissions.toString)

@@ -107,14 +107,15 @@ class DslParitySpec extends SparkSpec {
   }
 
   test("property: typed path is correct when EliminateSerialization does not fire (kryo round trips run)") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.EliminateSerialization")
-    // the rule really is off: the kryo deserializer stays in the plan
-    val plan = Compiler.compile(viaOpaque(2))(s.createDataset(keyed(1 to 10)))
-      .queryExecution.optimizedPlan
-    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[DecodeUsingSerializer[_]]))), plan)
-    checkTypedPath(s)
+    withNewSession { s =>
+      s.conf.set("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.EliminateSerialization")
+      // the rule really is off: the kryo deserializer stays in the plan
+      val plan = Compiler.compile(viaOpaque(2))(s.createDataset(keyed(1 to 10)))
+        .queryExecution.optimizedPlan
+      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[DecodeUsingSerializer[_]]))), plan)
+      checkTypedPath(s)
+    }
   }
 
   // --- random stateful terms (Get/Put, alternate, fsm) ----------------------

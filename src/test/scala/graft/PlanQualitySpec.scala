@@ -421,23 +421,24 @@ class PlanQualitySpec extends SparkSpec {
     import graft.operators.OpCache
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    val s2 = spark.newSession()
-    val a = OpCache.persistRotating("opcache.scope.test", Seq(1L, 2L).toDF("x"))
-    a.count()
-    assert(a.storageLevel !== StorageLevel.NONE)
-    // same slot, DIFFERENT session: must not evict a
-    val b = OpCache.persistRotating("opcache.scope.test",
-      { import s2.implicits._; Seq(3L).toDF("x") })
-    b.count()
-    assert(a.storageLevel !== StorageLevel.NONE,
-      "a second session's rotation evicted the first session's live frame")
-    assert(b.storageLevel !== StorageLevel.NONE)
-    // same slot, SAME session: rotates the previous generation out
-    val c = OpCache.persistRotating("opcache.scope.test", Seq(4L).toDF("x"))
-    c.count()
-    assert(a.storageLevel === StorageLevel.NONE,
-      "same-session rotation must unpersist the previous generation")
-    Seq(b, c).foreach(_.unpersist())
+    withNewSession { s2 =>
+      val a = OpCache.persistRotating("opcache.scope.test", Seq(1L, 2L).toDF("x"))
+      a.count()
+      assert(a.storageLevel !== StorageLevel.NONE)
+      // same slot, DIFFERENT session: must not evict a
+      val b = OpCache.persistRotating("opcache.scope.test",
+        { import s2.implicits._; Seq(3L).toDF("x") })
+      b.count()
+      assert(a.storageLevel !== StorageLevel.NONE,
+        "a second session's rotation evicted the first session's live frame")
+      assert(b.storageLevel !== StorageLevel.NONE)
+      // same slot, SAME session: rotates the previous generation out
+      val c = OpCache.persistRotating("opcache.scope.test", Seq(4L).toDF("x"))
+      c.count()
+      assert(a.storageLevel === StorageLevel.NONE,
+        "same-session rotation must unpersist the previous generation")
+      Seq(b, c).foreach(_.unpersist())
+    }
   }
 
   test("OpCache slot survives re-persisting a re-built CTE plan (CacheManager's normalized key)") {

@@ -46,6 +46,13 @@ class SourceLintSpec extends AnyFunSuite {
       s"sessions built outside SessionConf.common: ${offenders.mkString(", ")}")
   }
 
+  test(".read.parquet( appears in src/main only in Tables: one loader, no schema-inference job") {
+    val offenders = SourceScan.mainSources.collect { case (file, lines)
+      if file != "graft/Tables.scala" && SourceScan.code(lines).exists(_.contains(".read.parquet(")) => file }
+    assert(SourceScan.mainSources.exists(_._1 == "graft/Tables.scala"), "scan found no Tables")
+    assert(offenders.isEmpty, s"parquet read outside Tables.parquet: ${offenders.mkString(", ")}")
+  }
+
   private def streamingCode(pattern: String): Seq[String] =
     SourceScan.mainSources.collect { case (file, lines) if file.startsWith("graft/streaming/") &&
       SourceScan.code(lines).exists(_.contains(pattern)) => file }

@@ -55,6 +55,19 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` with a new session of the shared context, then close that
+    * session's ArtifactManager. A session dropped unclosed forks
+    * `rm -rf /tmp/artifacts-<id>/<session>` from a `Cleaner` once a GC finds
+    * it unreachable, and that can be a minute later: AQE pool threads born
+    * while it was active inherit it as their active session and hold it
+    * until they idle out, so the fork lands in whatever runs then
+    * (CheckpointIoSpec's zero-subprocess window). Closing runs the deletion
+    * here, once. */
+  def withNewSession[T](body: SparkSession => T): T = {
+    val s = spark.newSession()
+    try body(s) finally s.sessionState.artifactManager.close()
+  }
+
   /** Run `body` under a job listener and a query-execution listener. */
   def trace[T](body: => T): (T, Traced) = {
     val jobs = new AtomicInteger(0)

@@ -97,14 +97,15 @@ class StreamIngestTwsSpec extends SparkSpec {
       // second half then near-dups AGAINST FIRST-HALF STATE (doc 20 vs doc
       // 10's bucket history) and shrinks a first-half rep (doc 3 < 10) —
       // neither works unless the restored state is complete.
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-      secondHalf.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-      // default construction is restart-safe: same call, fresh session
-      val (q2, st2) = StreamIngestTws.start(docsStream(s2), ckpt, stateDir)
-      try q2.processAllAvailable() finally q2.stop()
-      assert(st2.packed.collect().toSeq === StreamIngest.ingestBatch(
-        (firstHalf ++ secondHalf).toDF("doc_id", "text")).collect().toSeq)
+      withNewSession { s2 =>
+        s2.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+        secondHalf.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
+        // default construction is restart-safe: same call, fresh session
+        val (q2, st2) = StreamIngestTws.start(docsStream(s2), ckpt, stateDir)
+        try q2.processAllAvailable() finally q2.stop()
+        assert(st2.packed.collect().toSeq === StreamIngest.ingestBatch(
+          (firstHalf ++ secondHalf).toDF("doc_id", "text")).collect().toSeq)
+      }
     }
   }
 

@@ -1174,20 +1174,21 @@ class StreamingSpec extends SparkSpec {
     // SparkSession whose ingest state comes from stateDir's parquet tables
     // + _latest marker ALONE (the shared test JVM keeps one SparkContext,
     // which holds no ingest state — every frame below reads disk)
-    val s2 = spark.newSession()
-    assert(StreamIngest.load(s2, stateDir).lastCommittedBatch >= 0L,
-      "marker must rehydrate the committed batch id")
-    secondHalf.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
-    // DEFAULT CONSTRUCTION is restart-safe: the restart is the very same
-    // front-door call as the first start — no explicit load/prior wiring
-    val (q2, st2) = StreamIngest.start(docsStream(s2), ckpt, stateDir)
-    try q2.processAllAvailable() finally q2.stop()
-    val full = (firstHalf ++ secondHalf).toDF("doc_id", "text")
-    assert(st2.packed.collect().toSeq ===
-      StreamIngest.ingestBatch(full).collect().toSeq)
-    // the flipped {C,D} decision and the rep shrink both made it through
-    // the disk round-trip: survivors are A (rep 3), D (rep 25), U1, V1
-    assert(st2.packed.collect().map(_.getLong(4)).sum === 30L + 30L + 25L + 25L)
+    withNewSession { s2 =>
+      assert(StreamIngest.load(s2, stateDir).lastCommittedBatch >= 0L,
+        "marker must rehydrate the committed batch id")
+      secondHalf.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
+      // DEFAULT CONSTRUCTION is restart-safe: the restart is the very same
+      // front-door call as the first start — no explicit load/prior wiring
+      val (q2, st2) = StreamIngest.start(docsStream(s2), ckpt, stateDir)
+      try q2.processAllAvailable() finally q2.stop()
+      val full = (firstHalf ++ secondHalf).toDF("doc_id", "text")
+      assert(st2.packed.collect().toSeq ===
+        StreamIngest.ingestBatch(full).collect().toSeq)
+      // the flipped {C,D} decision and the rep shrink both made it through
+      // the disk round-trip: survivors are A (rep 3), D (rep 25), U1, V1
+      assert(st2.packed.collect().map(_.getLong(4)).sum === 30L + 30L + 25L + 25L)
+    }
   }
 
   test("decontamination twin: stream report == batch t44 after every prefix, across a restart") {
