@@ -17,15 +17,22 @@ final case class Keyed[A](key: Long, seq: Long, value: A)
   *     (whole-stage codegen; predicates push down to the scan).
   *     `Alternate(map, map)` additionally compiles to row_number-parity
   *     routing — no state machine needed.
-  *  2. *Typed stateless path* — opaque lambdas: one `ds.map` (MapElements)
-  *     or `ds.filter` (TypedFilter) per stage, kryo-encoded in between so
-  *     Catalyst elides the round trips and the chain runs in whole-stage
-  *     codegen (distributed, no shuffle, key/seq preserved).
-  *  3. *Stateful fallback* — anything with real Get/Put control flow runs
-  *     the reference interpreter per key over seq-sorted groups: one shuffle
-  *     by key, then embarrassingly parallel across keys. This is the batch
-  *     analogue of `flatMapGroupsWithState` (the streaming form lives in
-  *     graft.streaming.StreamFsm).
+  *  2. *Typed stateless path* — opaque lambdas: each run of consecutive
+  *     maps is fused into one function and each run of filters into one
+  *     predicate, then one `ds.map` (MapElements) or `ds.filter`
+  *     (TypedFilter) per fused stage, kryo-encoded in between so Catalyst
+  *     elides the round trips and the chain runs in whole-stage codegen
+  *     (distributed, no shuffle, key/seq preserved). Fusion allocates one
+  *     `Keyed` per map run instead of one per map.
+  *  3. *Stateful fallback* — anything with real Get/Put control flow:
+  *     one hash shuffle on `key`, each partition sorted on `seq` alone, then
+  *     [[Interpreter.runKeyed]] in `mapPartitions` keeps one machine per key
+  *     and pushes each row to its key's machine, emitting that machine's
+  *     `Put`s lazily up to its next `Get`. Memory contract: no element is
+  *     buffered per key; a partition holds one machine (continuation plus
+  *     emission counter) per live key, the same per-key state
+  *     graft.streaming.StreamFsm keeps in its state store. This is the
+  *     batch analogue of `flatMapGroupsWithState`.
   *
   * The normalizer's compose-fusion subsumes the reference's construction-time
   * Put/Get cancellation (reference `src/combinators.rs:101-120`, acknowledged
@@ -90,9 +97,12 @@ object Compiler {
     }
 
   /** Typed path: stateless fusion when possible, else the per-key
-    * interpreter fallback. Output `seq` is the input seq for stateless
-    * stages (order-preserving) and the per-key emission index for the
-    * stateful fallback (matching rspl's output-sequence semantics). */
+    * runner fallback. Output `seq` is the input seq for stateless stages
+    * (order-preserving) and the per-key emission index for the stateful
+    * fallback (matching rspl's output-sequence semantics).
+    *
+    * The stateful fallback needs a product-encoded `Keyed` (top-level `key`
+    * and `seq` columns): it shuffles and sorts on them. */
   def compile[A, B](sp: SP[A, B])(ds: Dataset[Keyed[A]])(
       implicit encB: Encoder[Keyed[B]]): Dataset[Keyed[B]] = {
     statelessStages(sp) match {
@@ -100,34 +110,39 @@ object Compiler {
         // no shuffle; EliminateSerialization drops every kryo round trip
         // between stages, so intermediate types need no Spark encoder
         val anyEnc = Encoders.kryo[Keyed[Any]]
-        stages.foldLeft(ds.asInstanceOf[Dataset[Keyed[Any]]]) {
+        fuse(stages).foldLeft(ds.asInstanceOf[Dataset[Keyed[Any]]]) {
           case (d, MapStage(f, _)) => d.map(k => Keyed(k.key, k.seq, f(k.value)))(anyEnc)
           case (d, FilterStage(p, _)) => d.filter(k => p(k.value))
         }.map(_.asInstanceOf[Keyed[B]])(encB)
       case None =>
-        // one shuffle on key, then the reference interpreter per key —
+        for (c <- Seq("key", "seq") if !ds.columns.exists(_.equalsIgnoreCase(c)))
+          throw new IllegalArgumentException(
+            s"Compiler.compile: the input has no top-level `$c` column (columns: " +
+              s"${ds.columns.mkString(", ")}); the stateful path needs a product-encoded Keyed")
+        // one shuffle on key, each partition sorted on seq alone (a radix
+        // sort on one long), then one machine per key fed row by row —
         // per-key sequential (rspl semantics ARE sequential per stream),
-        // parallel across keys. Keys must fit per-executor memory; at 100 TB
-        // that is the same contract as any keyed stateful op.
-        ds.groupByKey(_.key)(Encoders.scalaLong)
-          .flatMapGroups { (k: Long, it: Iterator[Keyed[A]]) =>
-            val sorted = it.toVector.sortBy(_.seq)
-            Interpreter.eval(sp, sorted.iterator.map(_.value)).iterator
-              .zipWithIndex
-              .map { case (b, i) =>
-                if (i >= MaxOutputsPerKey) throw new IllegalStateException(
-                  s"Compiler.compile: key $k emitted more than MaxOutputsPerKey = " +
-                    s"$MaxOutputsPerKey outputs (a Put-only loop in the per-key fallback?)")
-                Keyed(k, i.toLong, b)
-              }
-          }
+        // parallel across keys
+        ds.repartition(col("key")).sortWithinPartitions(col("seq"))
+          .mapPartitions(rows => Interpreter.runKeyed(sp, rows, MaxOutputsPerKey))(encB)
     }
   }
 
+  /** Fuses each run of consecutive maps into one function and each run of
+    * consecutive filters into one predicate: one `Keyed` per map run, not
+    * per map. */
+  private def fuse(stages: List[Stage]): List[Stage] =
+    stages.foldRight(List.empty[Stage]) {
+      case (MapStage(f, _), MapStage(g, _) :: rest) => MapStage(v => g(f(v)), None) :: rest
+      case (FilterStage(p, _), FilterStage(q, _) :: rest) => FilterStage(v => p(v) && q(v), None) :: rest
+      case (stage, rest) => stage :: rest
+    }
+
   /** Safety valve for Put-only loops under finite batch input (a generator
     * composed into a pipeline would otherwise emit forever): the fallback
-    * fails the job, naming the key, once a key emits more outputs than
-    * this. */
+    * fails the job, naming the key, when a key's output past this many is
+    * requested. Outputs are produced lazily, so none are buffered up to
+    * the cap. */
   val MaxOutputsPerKey: Int = 10_000_000
 
   /** Demand-driven generator (reference R8 / `tests/demands.rs`): n steps of

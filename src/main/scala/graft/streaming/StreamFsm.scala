@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * [[fsmStreamEventTimeTws]], which differ only in how a row becomes the
   * transition's input and how a requested timer becomes an instant.
   * State-store-backed, exactly-once under checkpointing, parallel across
-  * keys — the streaming twin of the batch `flatMapGroups` fallback (same
-  * transition function, same per-key output sequence).
+  * keys — the streaming twin of `Compiler.compile`'s batch per-key runner
+  * (same transition function, same per-key output sequence).
   *
   * Timeout support covers the reference's `EmitTimeoutAfter` feedback
   * pattern (`examples/pelican.rs:323-325,346-367`): instead of an external

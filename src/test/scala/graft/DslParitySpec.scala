@@ -146,7 +146,7 @@ class DslParitySpec extends SparkSpec {
     } yield wrap
   }
 
-  test("property: stateful terms — compiled (flatMapGroups) == interpreter, per key") {
+  test("property: stateful terms — compiled (per-key runner) == interpreter, per key") {
     checkAll(Gen.zip(genStateful, Gen.listOfN(24, Gen.choose(-50, 50))), 20) {
       case (sp, input) => assert(compiled(sp, input) === oracle(sp, input))
     }
@@ -229,5 +229,38 @@ class DslParitySpec extends SparkSpec {
       .map(_.getMessage).mkString("\n")
     assert(msgs.contains("key 7") &&
       msgs.contains(s"MaxOutputsPerKey = ${Compiler.MaxOutputsPerKey}"), msgs)
+  }
+
+  test("property: stateful terms over ~40 keys, rows out of seq order across partitions — compiled == interpreter, seq 0..n-1") {
+    val genRows = for {
+      n <- Gen.choose(60, 160)
+      keys <- Gen.listOfN(n, Gen.choose(0L, 39L))
+      values <- Gen.listOfN(n, Gen.choose(-50, 50))
+      shuffleSeed <- Gen.long
+    } yield new scala.util.Random(shuffleSeed).shuffle((0 until n).toVector)
+      .map(i => Keyed(keys(i), i.toLong, values(i)))
+    checkAll(Gen.zip(genStateful, genRows), 12) { case (sp, rows) =>
+      val got = Compiler.compile(sp)(spark.sparkContext.parallelize(rows, 5).toDS()).collect().toVector
+        .groupBy(_.key)
+      got.values.foreach(out => assert(out.map(_.seq).sorted === out.indices.map(_.toLong)))
+      val expect = rows.groupBy(_.key).map { case (k, rs) =>
+        k -> Interpreter.evalN(sp, rs.sortBy(_.seq).map(_.value), 100000)
+      }.filter(_._2.nonEmpty)
+      assert(got.view.mapValues(_.sortBy(_.seq).map(_.value)).toMap === expect)
+    }
+  }
+
+  test("stateful fallback is lazy: a limit over a Put-only loop returns without reaching the cap") {
+    val forever: SP[Int, Long] =
+      SP.get((_: Int) => SP.generate[Int, Long, Long](n => (n, n + 1), 0L))
+    val out = Compiler.compile(forever)(spark.createDataset(Seq(Keyed(7L, 0L, 1)))).limit(5).collect()
+    assert(out.toSeq.sortBy(_.seq) === (0L until 5L).map(i => Keyed(7L, i, i)))
+  }
+
+  test("stateful fallback rejects a Keyed input without top-level key/seq columns, naming the column") {
+    val ds = spark.createDataset(Seq(Keyed(0L, 0L, 1)))(org.apache.spark.sql.Encoders.kryo[Keyed[Int]])
+    val e = intercept[IllegalArgumentException](Compiler.compile(SP.fsm(0) { (n: Int, v: Int) =>
+      (n + v, Seq(n + v)) })(ds))
+    assert(e.getMessage.contains("`key`") && e.getMessage.contains("product-encoded Keyed"), e.getMessage)
   }
 }

@@ -498,4 +498,71 @@ class PlanQualitySpec extends SparkSpec {
         s"$name: a pipeline MapElements/Filter runs outside whole-stage codegen:\n$plan")
     }
   }
+
+  /** 1000 `Keyed` rows over 7 keys from a projection: no input-side
+    * MapElements to blur the counts. */
+  private def keyedRange = {
+    import spark.implicits._
+    spark.range(1000).select(($"id" % 7).as("key"), $"id".as("seq"), $"id".as("value"))
+      .as[graft.dsl.Keyed[Long]]
+  }
+
+  test("DSL stateful fallback: one hash shuffle on key, one sort on seq alone, the runner in MapPartitions") {
+    // the two-column (key, seq) comparison sort, the appended grouping key
+    // and the per-key group collection were the fallback's cost
+    import graft.dsl.{Compiler, SP}
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val sum = SP.fsm(0L) { (acc: Long, v: Long) => (acc + v, Seq(acc + v)) }
+    val df = Compiler.compile(sum)(keyedRange).toDF()
+    df.collect() // AQE settles the final plan on the first action
+    val plan = df.queryExecution.executedPlan
+    val nodes = aqe.collect(plan) { case p => p }
+    def names(a: Seq[Expression]): Seq[String] =
+      a.collect { case at: Attribute => at.name }
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, s"shuffles:\n$plan")
+    exchanges.head.outputPartitioning match {
+      case h: HashPartitioning => assert(names(h.expressions) === Seq("key"), s"partitioning:\n$plan")
+      case other => fail(s"not a hash partitioning: $other\n$plan")
+    }
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.size === 1 && names(sorts.head.sortOrder.map(_.child)) === Seq("seq"),
+      s"sorts:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[MapPartitionsExec]), s"no MapPartitions runner:\n$plan")
+    val grouping = nodes.filter(p => p.nodeName.startsWith("AppendColumns") ||
+      p.isInstanceOf[MapGroupsExec] || p.isInstanceOf[ObjectHashAggregateExec])
+    assert(grouping.isEmpty, s"per-key grouping machinery:\n$plan")
+  }
+
+  test("DSL typed path: runs of maps and of filters fuse: filter . map . map . map is one Filter and two MapElements") {
+    import graft.dsl.{Compiler, SP}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import spark.implicits._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    val sp = SP.compose(SP.compose(SP.compose(SP.filter[Long](_ % 2 == 0),
+      SP.map[Long, Long](_ + 1)), SP.map[Long, String](_.toString)), SP.map[String, Long](_.length.toLong))
+    val df = Compiler.compile(sp)(keyedRange).toDF()
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val nodes = aqe.collect(plan) { case p => p }
+    val filters = nodes.filter(_.isInstanceOf[FilterExec])
+    val maps = nodes.filter(_.isInstanceOf[MapElementsExec])
+    // the fused map run, then the cast to the output encoder
+    assert(filters.size === 1 && maps.size === 2, s"unfused stages:\n$plan")
+    val codegen = aqe.collect(plan) { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+    assert((filters ++ maps).forall(op => codegen.exists(_ eq op)),
+      s"a stage runs outside whole-stage codegen:\n$plan")
+  }
 }

@@ -79,4 +79,12 @@ class SourceLintSpec extends AnyFunSuite {
     }.filter(_._2 > 0).toMap
     assert(counts === allowed, "StatefulProcessor subclasses per file")
   }
+
+  test("no per-key buffering under graft/dsl: no groupByKey, no .toVector.sortBy") {
+    val dsl = SourceScan.mainSources.filter(_._1.startsWith("graft/dsl/"))
+    val offenders = dsl.collect { case (file, lines)
+      if SourceScan.code(lines).exists(l => l.contains("groupByKey") || l.contains(".toVector.sortBy")) => file }
+    assert(dsl.exists(_._1 == "graft/dsl/Compiler.scala"), "scan found no Compiler")
+    assert(offenders.isEmpty, s"per-key buffering in the DSL: ${offenders.mkString(", ")}")
+  }
 }
