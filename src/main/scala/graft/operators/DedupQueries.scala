@@ -60,12 +60,12 @@ object DedupQueries {
     * not as an `ExceptionInInitializerError` of this object. */
   lazy val LocalFoldMaxEdges: Long = graft.Env.long("SPARK_GRAFT_LOCAL_FOLD_MAX_EDGES", 4L << 20)
 
-  /** The K-tuning contract, executable. Random (non-neighbor) pairs collide
-    * in a K-bit bucket with probability ~L/2^K, so candidates grow as
-    * n^2 * L / 2^K unless K grows with log2(n) — this is the rule of thumb
-    * documented on [[embeddingLshPairs]], anchored so the 500-vector
-    * fixture resolves to exactly the fixture K=6 (every sf0.01 oracle and
-    * recall floor is unchanged): K(n) = round(2*log2(n)) - 12, floored at
+  /** The K-tuning contract, executable, and the one place it is stated.
+    * Random (non-neighbor) pairs collide in a K-bit bucket with
+    * probability ~L/2^K, so candidates grow as n^2 * L / 2^K unless K
+    * grows with log2(n). The rule is anchored so the 500-vector fixture
+    * resolves to exactly the fixture K=6 (every sf0.01 oracle and recall
+    * floor is unchanged): K(n) = round(2*log2(n)) - 12, floored at
     * the fixture K and capped at 24 (16M buckets/table — beyond that,
     * per-table recall p^K for the cos>=0.9 near-dup regime decays with no
     * candidate left to prune at any plausible corpus size). Growing K
@@ -834,8 +834,8 @@ object DedupQueries {
       oracle = Some(PairSql)),
 
     // ----- LSH capacity introspection (d14) ---------------------------------
-    // The tuning evidence behind d06's K ~ 2*log2(n) - 10 contract, AS A
-    // QUERY: per LSH table, how full are the buckets and how many
+    // The tuning evidence behind d06's K contract (autoPlanesPerTable), AS
+    // A QUERY: per LSH table, how full are the buckets and how many
     // candidate pairs would the self-join generate (sum over buckets of
     // occ*(occ-1)/2 — the exact pre-verify join size)? Run before a
     // 100 TB dedup, this report says whether K is too small (hot buckets,
@@ -1539,8 +1539,9 @@ object DedupQueries {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** JVM per-table sign-LSH bucket kernel — shared by batch d06 and the
-    * streaming twin so both compute identical buckets.
+  /** JVM per-table sign-LSH bucket kernel — shared by the batch pair
+    * kernel ([[LshPairs]]) and StreamDedup's streaming feed, so both
+    * compute identical buckets.
     *
     * Example (run verbatim by DocExamplesSpec):
     * {{{
@@ -1589,18 +1590,14 @@ object DedupQueries {
   def lshTableCount: Int = LshTables
   def lshPlanesPerTableCount: Int = LshPlanesPerTable
 
-  /** The d06 pipeline over an arbitrary (vec_id, embedding) table.
-    *
-    * Tuning contract for scale: random (non-neighbor) pairs collide in a
-    * K-bit bucket with probability ~L/2^K, so the candidate set grows as
-    * n^2 * L / 2^K — K must grow with log2(n) (rule of thumb:
-    * K ≈ 2*log2(n) - 10 keeps expected random collisions per vector
-    * bounded) while L buys recall at p^K per table. The default
-    * `planesPerTable = AutoPlanes` EXECUTES that contract: K is derived
-    * from the corpus count by [[autoPlanesPerTable]] (the 500-vector
-    * fixture derives exactly the fixture K=6, tuned for its deliberately
-    * weak 0.4-cosine band); ScaleSpec drives this same pipeline at both
-    * an explicit K=14 and the auto-derived K over 2k/20k-vector corpora
+  /** The d06 pipeline over an arbitrary (vec_id, embedding) table: the
+    * [[LshPairs]] self form with each unordered pair once, verified at
+    * `minCosMilli`. L tables buy recall at p^K per table; K must grow with
+    * the corpus, and the default `planesPerTable = AutoPlanes` derives it
+    * from the vector count by the rule on [[autoPlanesPerTable]] (the
+    * 500-vector fixture derives exactly the fixture K=6, tuned for its
+    * deliberately weak 0.4-cosine band). ScaleSpec drives this pipeline at
+    * both an explicit K=14 and the derived K over 2k/20k-vector corpora
     * and asserts the runtime and pair trends stay near-linear.
     *
     * Example (run verbatim by DocExamplesSpec):
@@ -1617,43 +1614,9 @@ object DedupQueries {
       tables: Int = LshTables, planesPerTable: Int = AutoPlanes,
       minCosMilli: Long = 400L): DataFrame = {
     import s.implicits._
-    val vecs = cached(embeddings.select($"vec_id", $"embedding"))
-    // AutoPlanes: one metadata-cheap count over the (already cached) vector
-    // frame buys the geometry the K-tuning contract demands at THIS corpus
-    // size — the round-8 verdict's fixed-K superlinearity (s11 3.35x, d19
-    // 3.71x per decade at the sf1 probe) was exactly this count not
-    // happening. At the 500-vector fixture the derived K equals the
-    // fixture K, so every oracle and recall floor is byte-identical.
-    val ppt = if (planesPerTable == AutoPlanes) autoPlanesPerTable(vecs.count())
-              else planesPerTable
-    val planes = VectorFns.hyperplanes(tables * ppt, EmbDim)
-    // (vec_id, table, bucket) rows — JVM kernel, same materialize-before-
-    // self-join principle as d03's band rows
-    // Bucket rows carry the PREFIX of the vector's bucket signature (the
-    // buckets of tables before `tbl`) so a pair colliding in several tables
-    // is emitted exactly once — at its minimal shared table (the same
-    // exactly-once trick StreamDedup uses). That replaces the round-3
-    // global `distinct` over the exploded candidate set — a full extra
-    // Exchange on the widest intermediate — and the prefix (avg L/2
-    // elements instead of L) halves the signature bytes shuffled through
-    // the self-join.
-    val buckets = cached(vecs.as[(Long, Array[Float])]
-      .flatMap { case (id, emb) =>
-        val bks = lshBucketsOf(emb, tables, ppt, planes)
-        (0 until tables).iterator.map(t => (id, t, bks(t), bks.take(t).toSeq))
-      }.toDF("vec_id", "tbl", "bucket", "sig"))
-    val cand = buckets.select($"tbl", $"bucket", $"vec_id".as("vec_a"), $"sig".as("sig_a"))
-      .join(buckets.select($"tbl", $"bucket", $"vec_id".as("vec_b"), $"sig".as("sig_b")), Seq("tbl", "bucket"))
-      .filter($"vec_a" < $"vec_b" && minSharedTable)
-      .select($"vec_a", $"vec_b")
-    cand
-      .join(vecs.select($"vec_id".as("vec_a"), $"embedding".as("ea")), Seq("vec_a"))
-      .join(vecs.select($"vec_id".as("vec_b"), $"embedding".as("eb")), Seq("vec_b"))
-      // codegen'd fused cosine (CosineMilliExpr) — bit-equal to the typed
-      // cosMilliOf loop (VectorExprSpec) but stays in whole-stage codegen:
-      // no row ser/deser on the verify hot path
-      .select($"vec_a", $"vec_b", graft.functions.VectorFns.cosineMilli($"ea", $"eb").as("cos_milli"))
+    LshPairs.selfPairs("d06", embeddings, tables, planesPerTable, EmbDim, _ < _)
       .filter($"cos_milli" >= minCosMilli)
+      .select($"a".as("vec_a"), $"b".as("vec_b"), $"cos_milli")
       .orderBy($"vec_a", $"vec_b")
   }
 
@@ -1678,19 +1641,10 @@ object DedupQueries {
     org.apache.spark.sql.functions.expr(
       "NOT exists(zip_with(sig_a, sig_b, (x, y) -> x = y), c -> c)")
 
-  /** d06 is deterministic given the fixed-seed hyperplanes, so — like s02 —
-    * it gets a full oracle: per-table 4-bit buckets recomputed in DuckDB
-    * from literal planes (list_dot_product matches the JVM kernel's
-    * sequential double accumulation bit for bit), candidates = pairs
-    * sharing any table bucket, verified with the exact cosine. */
   /** d14 oracle: the same literal-plane per-table buckets as d06's oracle,
     * unpivoted and aggregated to the occupancy report. */
   private def d14OracleSql: String = {
-    val planes = graft.functions.VectorFns.hyperplanes(LshTables * LshPlanesPerTable, EmbDim)
-    def bucket(t: Int): String = (0 until LshPlanesPerTable).map { k =>
-      s"(CASE WHEN list_dot_product(e, ${SimilarityQueries.planeLit(planes(t * LshPlanesPerTable + k))}) >= 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
-    val bcols = (0 until LshTables).map(t => s"(${bucket(t)}) AS b$t").mkString(",\n               ")
+    val (bcols, _) = SimilarityQueries.fixtureBucketSql("a", "b")
     val unions = (0 until LshTables)
       .map(t => s"SELECT $t AS tbl, b$t AS bucket FROM bk").mkString("\n          UNION ALL ")
     s"""
@@ -1709,13 +1663,13 @@ object DedupQueries {
         ORDER BY tbl"""
   }
 
+  /** d06 is deterministic given the fixed-seed hyperplanes, so — like s02 —
+    * it gets a full oracle: per-table K-bit buckets recomputed in DuckDB
+    * from literal planes (list_dot_product matches the JVM kernel's
+    * sequential double accumulation bit for bit), candidates = pairs
+    * sharing any table bucket, verified with the exact cosine. */
   private[operators] def d06OracleSql: String = {
-    val planes = graft.functions.VectorFns.hyperplanes(LshTables * LshPlanesPerTable, EmbDim)
-    def bucket(t: Int): String = (0 until LshPlanesPerTable).map { k =>
-      s"(CASE WHEN list_dot_product(e, ${SimilarityQueries.planeLit(planes(t * LshPlanesPerTable + k))}) >= 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
-    val bcols = (0 until LshTables).map(t => s"(${bucket(t)}) AS b$t").mkString(",\n               ")
-    val cond = (0 until LshTables).map(t => s"a.b$t = b.b$t").mkString(" OR ")
+    val (bcols, cond) = SimilarityQueries.fixtureBucketSql("a", "b")
     s"""
         WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         bk AS (SELECT vec_id, e,

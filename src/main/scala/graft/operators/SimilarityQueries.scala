@@ -807,7 +807,7 @@ object SimilarityQueries {
     // graph-based dedup builds on. Candidates come from d06's banded
     // sign-LSH buckets (shared kernels => identical geometry), so the
     // self-join is an equi-join on (table, bucket): per-node work is
-    // bounded by bucket occupancy (the K ~ 2*log2(n) tuning contract),
+    // bounded by bucket occupancy (the K contract on autoPlanesPerTable),
     // never the corpus — the difference between O(n * occupancy) and the
     // O(n^2) brute-force graph at 100 TB. Exact integer-milli cosine
     // scoring, rank ties to the lower neighbor id.
@@ -1935,68 +1935,27 @@ object SimilarityQueries {
       .select($"doc_id", $"embedding")
     // geometry follows the heldout count (see scaladoc); derived once,
     // before any bucket row exists, so both sides bucket identically
-    val ppt = if (planesPerTable == DedupQueries.AutoPlanes)
-      DedupQueries.autoPlanesPerTable(held.count()) else planesPerTable
-    val planes = VectorFns.hyperplanes(tables * ppt, dim)
-    val heldBk = semBucketRows(held, tables, ppt, planes)
-      .select($"id".as("held_id"), $"tbl", $"bucket", $"sig".as("sig_b"))
-      .join(held.select($"doc_id".as("held_id"), $"embedding".as("eb")), Seq("held_id"))
     semDecontStats(meta.filter($"is_train").join(vecs, Seq("doc_id"), "left"),
-        heldBk, tables, ppt, planes, minCosMilli)
+        LshPairs.sideOf(held, tables, planesPerTable, dim), minCosMilli)
       .orderBy($"lang")
   }
 
-  /** s22's per-vector sign-LSH bucket rows: one (id, tbl, bucket, sig) row
-    * per table, `sig` the bucket-signature PREFIX (tables before `tbl`)
-    * that lets [[DedupQueries.minSharedTable]] keep each colliding pair
-    * exactly once — the d06/s09 kernel over an arbitrary (id, embedding)
-    * frame, shared with the streaming twin so both compute identical
-    * buckets. */
-  private[graft] def semBucketRows(vecs: DataFrame, tables: Int, ppt: Int,
-      planes: Array[Array[Double]]): DataFrame = {
-    val s = vecs.sparkSession
-    import s.implicits._
-    vecs.as[(Long, Array[Float])].flatMap { case (id, emb) =>
-      val bks = DedupQueries.lshBucketsOf(emb, tables, ppt, planes)
-      (0 until tables).iterator.map(t => (id, t, bks(t), bks.take(t).toSeq))
-    }.toDF("id", "tbl", "bucket", "sig")
-  }
-
   /** s22's decision + economics half over TRAIN (doc_id, lang, n_toks,
-    * embedding-nullable) rows vs a static heldout bucket frame `heldBk`
-    * (held_id, tbl, bucket, sig_b, eb): per-lang sums, UNORDERED — the
-    * same split-invariant monoid as t44's
-    * ([[graft.streaming.StreamSemanticDecontaminate]] folds these per
-    * micro-batch; the batch report adds the orderBy). Each doc's drop
+    * embedding-nullable) rows vs the static heldout side `held`: per-lang
+    * sums, UNORDERED — the same split-invariant monoid
+    * as t44's ([[graft.streaming.StreamSemanticDecontaminate]] folds these
+    * per micro-batch; the batch report adds the orderBy). Each doc's drop
     * decision is against the static heldout set only, so the sums are
     * order- and split-independent. */
-  /** s22's drop decision over (doc_id, embedding) TRAIN rows vs a heldout
-    * bucket frame: the distinct doc_ids whose embedding clears the cosine
-    * bar against any heldout embedding — shared by the s22 report and the
-    * s23 apply step. */
-  private[graft] def semDroppedIds(withVec: DataFrame, heldBk: DataFrame,
-      tables: Int, ppt: Int, planes: Array[Array[Double]],
-      minCosMilli: Long): DataFrame = {
-    val s = withVec.sparkSession
-    import s.implicits._
-    val trainBk = semBucketRows(withVec, tables, ppt, planes)
-      .select($"id".as("doc_id"), $"tbl", $"bucket", $"sig".as("sig_a"))
-    trainBk.join(heldBk, Seq("tbl", "bucket"))
-      .filter(DedupQueries.minSharedTable)
-      .select($"doc_id", $"eb")
-      .join(withVec.select($"doc_id", $"embedding".as("ea")), Seq("doc_id"))
-      .filter(VectorFns.cosineMilli($"ea", $"eb") >= minCosMilli)
-      .select($"doc_id").distinct()
-  }
-
-  private[graft] def semDecontStats(train: DataFrame, heldBk: DataFrame,
-      tables: Int, ppt: Int, planes: Array[Array[Double]],
+  private[graft] def semDecontStats(train: DataFrame, held: LshPairs.Side,
       minCosMilli: Long): DataFrame = {
     val s = train.sparkSession
     import s.implicits._
     val withVec = train.filter($"embedding".isNotNull)
       .select($"doc_id", $"embedding")
-    val dropped = semDroppedIds(withVec, heldBk, tables, ppt, planes, minCosMilli)
+    val dropped = LshPairs.crossPairs(withVec, held)
+      .filter($"cos_milli" >= minCosMilli)
+      .select($"a".as("doc_id")).distinct()
     train
       .join(dropped.withColumn("is_dropped", lit(1L)), Seq("doc_id"), "left")
       .groupBy($"lang")
@@ -2006,11 +1965,12 @@ object SimilarityQueries {
         sum(when($"is_dropped".isNull, $"n_toks").otherwise(0L)).as("tokens_clean"))
   }
 
-  /** Literal-plane bucket SQL for the fixture geometry, shared by the
-    * s22/s23 oracles: the per-table bucket column list (aliased b0..bL-1
-    * over a DOUBLE[] column `e`) and the any-shared-bucket join condition
-    * between row aliases `a` and `b`. */
-  private def fixtureBucketSql(a: String, b: String): (String, String) = {
+  /** Literal-plane bucket SQL for the fixture geometry, the one generator
+    * behind every oracle that replays the LSH buckets (d06, d14, s09, s22,
+    * s23 and the oracles embedding them): the per-table bucket column list
+    * (aliased b0..bL-1 over a DOUBLE[] column `e`) and the
+    * any-shared-bucket join condition between row aliases `a` and `b`. */
+  private[operators] def fixtureBucketSql(a: String, b: String): (String, String) = {
     val tables = DedupQueries.lshTableCount
     val ppt = DedupQueries.lshPlanesPerTableCount
     val planes = VectorFns.hyperplanes(tables * ppt, DedupQueries.embDim)
@@ -2107,15 +2067,10 @@ object SimilarityQueries {
     // semantic gate: identical geometry derivation to semanticDecontaminateReport
     val vecs = embeddings.select($"vec_id".as("doc_id"), $"embedding")
     val held = sh.filter(!$"is_train").select($"doc_id").join(vecs, Seq("doc_id"))
-    val ppt = if (planesPerTable == DedupQueries.AutoPlanes)
-      DedupQueries.autoPlanesPerTable(held.count()) else planesPerTable
-    val planes = VectorFns.hyperplanes(tables * ppt, dim)
-    val heldBk = semBucketRows(held, tables, ppt, planes)
-      .select($"id".as("held_id"), $"tbl", $"bucket", $"sig".as("sig_b"))
-      .join(held.select($"doc_id".as("held_id"), $"embedding".as("eb")), Seq("held_id"))
-    val semDropped = semDroppedIds(
-      trainSh.select($"doc_id").join(vecs, Seq("doc_id")),
-      heldBk, tables, ppt, planes, minCosMilli)
+    val semDropped = LshPairs.crossPairs(trainSh.select($"doc_id").join(vecs, Seq("doc_id")),
+        LshPairs.sideOf(held, tables, planesPerTable, dim))
+      .filter($"cos_milli" >= minCosMilli)
+      .select($"a".as("doc_id")).distinct()
     trainSh
       .join(lexDropped.unionByName(semDropped).distinct(), Seq("doc_id"), "left_anti")
       .select($"doc_id", $"lang", $"n_toks")
@@ -2147,14 +2102,13 @@ object SimilarityQueries {
         ORDER BY tr.doc_id"""
   }
 
-  /** The s09 pipeline over an arbitrary (vec_id, embedding) table. Bucket
-    * geometry defaults to AUTO: K is derived from the corpus count by
-    * [[DedupQueries.autoPlanesPerTable]] — the executable form of the
-    * K ~ 2*log2(n) tuning contract shared with
-    * [[DedupQueries.embeddingLshPairs]] (at the 500-vector fixture the
-    * derived K equals d06's fixture tuning, so sf0.01 oracles are
-    * unchanged; ScaleSpec drives both an explicit K=14 and the auto
-    * geometry over 2k/20k synthetic vectors).
+  /** The s09 pipeline over an arbitrary (vec_id, embedding) table: the
+    * [[LshPairs]] self form with both orientations of each pair, ranked
+    * top-k per source. Bucket geometry defaults to AUTO: K is derived from
+    * the corpus count by the rule on [[DedupQueries.autoPlanesPerTable]]
+    * (at the 500-vector fixture the derived K equals d06's fixture tuning,
+    * so sf0.01 oracles are unchanged; ScaleSpec drives both an explicit
+    * K=14 and the auto geometry over 2k/20k synthetic vectors).
     *
     * Example (run verbatim by DocExamplesSpec):
     * {{{
@@ -2169,37 +2123,11 @@ object SimilarityQueries {
       dim: Int = DedupQueries.embDim,
       k: Int = 5): DataFrame = {
     import s.implicits._
-    val vecs = OpCache.persistRotating("s09.vecs",
-      embeddings.select($"vec_id", $"embedding"))
-    // AutoPlanes (the default): the count doubles as the cache warm-up,
-    // and the derived K is the fixture K at fixture scale — see
-    // DedupQueries.autoPlanesPerTable for the contract and its anchor.
-    val ppt = if (planesPerTable == DedupQueries.AutoPlanes)
-      DedupQueries.autoPlanesPerTable(vecs.count()) else planesPerTable
-    val planes = VectorFns.hyperplanes(tables * ppt, dim)
-    // Signature-prefix bucket rows + minimal-shared-table filter: each
-    // directed candidate pair is emitted exactly once, replacing the
-    // round-3 global `distinct` Exchange (see DedupQueries.minSharedTable).
-    val buckets = OpCache.persistRotating("s09.buckets",
-      vecs.as[(Long, Array[Float])]
-        .flatMap { case (id, emb) =>
-          val bks = DedupQueries.lshBucketsOf(emb, tables, ppt, planes)
-          (0 until tables).iterator.map(t => (id, t, bks(t), bks.take(t).toSeq))
-        }.toDF("vec_id", "tbl", "bucket", "sig"))
-    val cand = buckets.select($"tbl", $"bucket", $"vec_id".as("src"), $"sig".as("sig_a"))
-      .join(buckets.select($"tbl", $"bucket", $"vec_id".as("nbr"), $"sig".as("sig_b")), Seq("tbl", "bucket"))
-      .filter($"src" =!= $"nbr" && DedupQueries.minSharedTable)
-      .select($"src", $"nbr")
-    val w = Window.partitionBy($"src").orderBy($"cos_milli".desc, $"nbr")
-    cand
-      .join(vecs.select($"vec_id".as("src"), $"embedding".as("es")), Seq("src"))
-      .join(vecs.select($"vec_id".as("nbr"), $"embedding".as("en")), Seq("nbr"))
-      // codegen'd fused cosine — bit-equal to cosMilliOf (VectorExprSpec),
-      // keeps the scoring stage inside whole-stage codegen
-      .select($"src", $"nbr", VectorFns.cosineMilli($"es", $"en").as("cos_milli"))
+    val w = Window.partitionBy($"a").orderBy($"cos_milli".desc, $"b")
+    LshPairs.selfPairs("s09", embeddings, tables, planesPerTable, dim, _ =!= _)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= k)
-      .select($"src".as("vec_id"), $"rank", $"nbr".as("nbr_id"), $"cos_milli")
+      .select($"a".as("vec_id"), $"rank", $"b".as("nbr_id"), $"cos_milli")
       .orderBy($"vec_id", $"rank")
   }
 
@@ -2207,14 +2135,7 @@ object SimilarityQueries {
     * hyperplanes as the Spark kernel), symmetric shared-bucket join,
     * exact-cosine rank — the established bucketed-candidate replay. */
   private def s09OracleSql: String = {
-    val tables = DedupQueries.lshTableCount
-    val ppt = DedupQueries.lshPlanesPerTableCount
-    val planes = VectorFns.hyperplanes(tables * ppt, DedupQueries.embDim)
-    def bucket(t: Int): String = (0 until ppt).map { k =>
-      s"(CASE WHEN list_dot_product(e, ${planeLit(planes(t * ppt + k))}) >= 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
-    val bcols = (0 until tables).map(t => s"(${bucket(t)}) AS b$t").mkString(",\n               ")
-    val cond = (0 until tables).map(t => s"a.b$t = b.b$t").mkString(" OR ")
+    val (bcols, cond) = fixtureBucketSql("a", "b")
     s"""
         WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         bk AS (SELECT vec_id, e,

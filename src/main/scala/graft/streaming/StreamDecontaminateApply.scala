@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.functions.VectorFns
-import graft.operators.{DedupQueries, SimilarityQueries, TextQueries}
+import graft.operators.{LshPairs, SimilarityQueries, TextQueries}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -29,42 +28,30 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * duplicates. [[kept]] reads the union back. */
 object StreamDecontaminateApply {
 
-  private final case class Gates(heldSh: DataFrame, heldBk: DataFrame,
-      tables: Int, ppt: Int, planes: Array[Array[Double]], minCosMilli: Long)
+  private final case class Gates(heldSh: DataFrame, held: LshPairs.Side, minCosMilli: Long)
 
   private def gatesOf(heldout: DataFrame, minCosMilli: Long): Gates = {
-    require(!heldout.isStreaming,
-      "the heldout benchmark set is static input — pass a batch DataFrame")
+    val held = StreamSemanticDecontaminate.heldStateOf(heldout)
     val heldSh = TextQueries.docShingles(
         heldout.select(col("doc_id"), col("text"), col("lang")))
       .select(explode(col("gs")).as("g")).distinct()
       .localCheckpoint() // static: built once, probed by every batch
-    val held = heldout.select(col("doc_id"), col("embedding"))
-      .filter(col("embedding").isNotNull)
-    val tables = DedupQueries.lshTableCount
-    val ppt = DedupQueries.autoPlanesPerTable(held.count())
-    val planes = VectorFns.hyperplanes(tables * ppt, DedupQueries.embDim)
-    val heldBk = SimilarityQueries.semBucketRows(held, tables, ppt, planes)
-      .select(col("id").as("held_id"), col("tbl"), col("bucket"),
-        col("sig").as("sig_b"))
-      .join(held.select(col("doc_id").as("held_id"),
-        col("embedding").as("eb")), Seq("held_id"))
-      .localCheckpoint()
-    Gates(heldSh, heldBk, tables, ppt, planes, minCosMilli)
+    Gates(heldSh, held, minCosMilli)
   }
 
   /** One micro-batch through both gates: the kept (doc_id, lang, n_toks)
-    * slice — the same seams ([[TextQueries.lexDroppedIds]] /
-    * [[SimilarityQueries.semDroppedIds]]) the batch apply step and both
-    * report twins run. */
+    * slice — the same seams ([[TextQueries.lexDroppedIds]] and the
+    * [[LshPairs]] cross form) the batch apply step and both report twins
+    * run. */
   private def keptBatch(batch: DataFrame, g: Gates): DataFrame = {
     val sh = TextQueries.docShingles(
       batch.select(col("doc_id"), col("text"), col("lang")))
     val lexDropped = TextQueries.lexDroppedIds(sh, g.heldSh)
     val withVec = batch.filter(col("embedding").isNotNull)
       .select(col("doc_id"), col("embedding"))
-    val semDropped = SimilarityQueries.semDroppedIds(
-      withVec, g.heldBk, g.tables, g.ppt, g.planes, g.minCosMilli)
+    val semDropped = LshPairs.crossPairs(withVec, g.held)
+      .filter(col("cos_milli") >= g.minCosMilli)
+      .select(col("a").as("doc_id")).distinct()
     sh.join(lexDropped.unionByName(semDropped).distinct(),
         Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_toks"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.functions.{TextFns, VectorFns}
-import graft.operators.{DedupQueries, SimilarityQueries}
+import graft.functions.TextFns
+import graft.operators.{DedupQueries, LshPairs, SimilarityQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -39,10 +39,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * against. */
 object StreamSemanticDecontaminate {
 
-  final class SemDecontState(s: SparkSession, stateDir: Option[String],
-      private[graft] val heldBk: DataFrame,
-      tables: Int, ppt: Int, planes: Array[Array[Double]],
-      minCosMilli: Long) {
+  final class SemDecontState private[graft] (s: SparkSession, stateDir: Option[String],
+      held: LshPairs.Side, minCosMilli: Long) {
 
     // the heldout buckets are static: their fingerprint is pinned to the fold
     private[graft] val fold = new BatchFold(s, Seq("stats" -> { (prev, _, batch) =>
@@ -50,15 +48,14 @@ object StreamSemanticDecontaminate {
       val train = batch.select(col("doc_id"), col("lang"),
         size(TextFns.tokens(col("text"))).cast("long").as("n_toks"),
         col("embedding"))
-      val bs = SimilarityQueries.semDecontStats(
-        train, heldBk, tables, ppt, planes, minCosMilli)
+      val bs = SimilarityQueries.semDecontStats(train, held, minCosMilli)
       prev.get("stats").map(_.unionByName(bs)).getOrElse(bs)
         .groupBy(col("lang"))
         .agg(sum(col("n_train")).as("n_train"),
           sum(col("n_dropped")).as("n_dropped"),
           sum(col("tokens_dropped")).as("tokens_dropped"),
           sum(col("tokens_clean")).as("tokens_clean"))
-    }), stateDir, Some(heldFingerprint(heldBk)))
+    }), stateDir, Some(heldFingerprint(held.buckets)))
 
     private[graft] def merge(batch: DataFrame, batchId: Long): Unit = fold.merge(batch, batchId)
 
@@ -69,32 +66,25 @@ object StreamSemanticDecontaminate {
     def lastCommittedBatch: Long = fold.lastCommittedBatch
   }
 
-  /** Order-free fingerprint of the heldout bucket frame: (row count,
-    * bit-xor of hashed (held_id, tbl, bucket)) — one row, sensitive to
+  /** Order-free fingerprint of the heldout bucket rows: (row count,
+    * bit-xor of hashed (held id, tbl, bucket)) — one row, sensitive to
     * both the heldout CONTENT and the derived GEOMETRY, so a restart
     * against a different benchmark set or a different K fails loudly. */
-  private def heldFingerprint(heldBk: DataFrame): DataFrame =
-    heldBk.agg(count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("held_id"), col("tbl"), col("bucket"))),
+  private def heldFingerprint(heldBuckets: DataFrame): DataFrame =
+    heldBuckets.agg(count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(col("id"), col("tbl"), col("bucket"))),
         lit(0L)).as("x"))
 
-  /** Build the static heldout state: bucket rows (geometry derived from
-    * the heldout count) carrying the heldout embedding for the verify. */
-  private[graft] def heldStateOf(heldout: DataFrame): (DataFrame, Int, Int, Array[Array[Double]]) = {
+  /** Build the static heldout side (vectors and bucket rows, geometry
+    * derived from the heldout count), shared with
+    * [[StreamDecontaminateApply]]. */
+  private[graft] def heldStateOf(heldout: DataFrame): LshPairs.Side = {
     require(!heldout.isStreaming,
       "the heldout benchmark set is static input — pass a batch DataFrame")
-    val held = heldout.select(col("doc_id"), col("embedding"))
-      .filter(col("embedding").isNotNull)
-    val tables = DedupQueries.lshTableCount
-    val ppt = DedupQueries.autoPlanesPerTable(held.count())
-    val planes = VectorFns.hyperplanes(tables * ppt, DedupQueries.embDim)
-    val heldBk = SimilarityQueries.semBucketRows(held, tables, ppt, planes)
-      .select(col("id").as("held_id"), col("tbl"), col("bucket"),
-        col("sig").as("sig_b"))
-      .join(held.select(col("doc_id").as("held_id"),
-        col("embedding").as("eb")), Seq("held_id"))
-      .localCheckpoint() // static: built once, probed by every batch
-    (heldBk, tables, ppt, planes)
+    LshPairs.sideOf(
+      heldout.select(col("doc_id"), col("embedding")).filter(col("embedding").isNotNull),
+      DedupQueries.lshTableCount, DedupQueries.AutoPlanes, DedupQueries.embDim,
+      (_, df) => df.localCheckpoint()) // static: built once, probed by every batch
   }
 
   /** Rehydrate a [[SemDecontState]] from a `stateDir` written by a
@@ -103,8 +93,7 @@ object StreamSemanticDecontaminate {
     * fold was built against. */
   def load(s: SparkSession, heldout: DataFrame, stateDir: String,
       minCosMilli: Long = 400L): SemDecontState = {
-    val (heldBk, tables, ppt, planes) = heldStateOf(heldout)
-    new SemDecontState(s, Some(stateDir), heldBk, tables, ppt, planes, minCosMilli)
+    new SemDecontState(s, Some(stateDir), heldStateOf(heldout), minCosMilli)
   }
 
   /** THE FRONT DOOR — durable by default: state persists to `stateDir`
@@ -118,9 +107,8 @@ object StreamSemanticDecontaminate {
   /** DEMO/TEST overload — ephemeral state, lost with the session. */
   def startEphemeral(train: DataFrame, heldout: DataFrame,
       checkpoint: String): (StreamingQuery, SemDecontState) = {
-    val (heldBk, tables, ppt, planes) = heldStateOf(heldout)
     startWith(train, checkpoint,
-      new SemDecontState(train.sparkSession, None, heldBk, tables, ppt, planes, 400L))
+      new SemDecontState(train.sparkSession, None, heldStateOf(heldout), 400L))
   }
 
   private def startWith(train: DataFrame, checkpoint: String,

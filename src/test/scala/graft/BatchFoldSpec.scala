@@ -106,9 +106,8 @@ class BatchFoldSpec extends SparkSpec {
     ("StreamSemanticDecontaminate", { () =>
       val heldout = (0 until 10).map(i => (i.toLong, s"held $i", "en", vec(i * 3)))
         .toDF("doc_id", "text", "lang", "embedding")
-      val (heldBk, tables, ppt, planes) = StreamSemanticDecontaminate.heldStateOf(heldout)
       val st = new StreamSemanticDecontaminate.SemDecontState(
-        spark, None, heldBk, tables, ppt, planes, 400L)
+        spark, None, StreamSemanticDecontaminate.heldStateOf(heldout), 400L)
       Probe(st.fold, st.merge, () => st.report)
     }, { i =>
       (0 until 20).map { j => val id = i * 20 + j; (100L + id, s"doc $id", langs(id % 3), vec(id)) }

@@ -559,6 +559,15 @@ class DocExamplesSpec extends SparkSpec {
       .as[Boolean].collect().toSeq === Seq(true, false, true))
   }
 
+  test("LshPairs.pairs scaladoc example") {
+    import graft.operators.LshPairs.{Geometry, pairs}
+    // tables 0 and 2 cut on x, table 1 on y: (1, 1) and (1, -1) collide
+    // in tables 0 and 2 only
+    val g = Geometry(3, 1, Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0)))
+    val s = g.side(Seq((1L, Array(1f, 1f)), (2L, Array(1f, -1f))).toDF("id", "embedding"))
+    assert(pairs(s, s, _ < _).as[(Long, Long, Long)].collect().toSeq === Seq((1L, 2L, 0L)))
+  }
+
   test("SimilarityQueries.planeLit scaladoc example") {
     assert(graft.operators.SimilarityQueries.planeLit(Array(1.0, -0.5)) === "[1.0,-0.5]")
   }
@@ -864,9 +873,10 @@ class DocExamplesSpec extends SparkSpec {
       // exercised by BOTH hybrid oracles (s20 exact, s21 indexed) —
       // postings/impactPrunedPostings/rrfFuse have doc examples below
       "lexTopR", "vecTopRExact", "vecTopRLsh",
-      // private[graft] s22 kernels shared with StreamSemanticDecontaminate;
+      // private[graft] s22 decision seam shared with StreamSemanticDecontaminate;
       // gated by the s22 oracle + the twin equivalence test
-      "semBucketRows", "semDecontStats", "semDroppedIds",
+      "semDecontStats",
+      "fixtureBucketSql", // oracle-SQL generator, embedded in the ten LSH oracles
       // private[graft] s11/d19 seams shared with StreamClusterLabels'
       // live-report composition; gated by the s11/d19 oracles + the
       // StreamDedupSpec composition test
@@ -892,7 +902,10 @@ class DocExamplesSpec extends SparkSpec {
       "trainSplitPred",   // private[operators] t06 split seam shared with s22;
                           // gated by the t06/t44/s22 oracles
       "trainSplitPredSql"), // its DuckDB mirror, embedded in the s22 oracle
-    "Multimodal" -> Set("FrameSize", "ShardBytes", "ShardGroups")) // constants
+    "Multimodal" -> Set("FrameSize", "ShardBytes", "ShardGroups"), // constants
+    // private[graft] kernel entry points; LshPairsSpec checks them against
+    // brute force, and the d06/s09/s22/s23 oracles gate every caller
+    "LshPairs" -> Set("geometry", "sideOf", "selfPairs", "crossPairs"))
 
   test("every public operator method has a runnable doc example or a documented exclusion") {
     // The reference's CONTRIBUTING policy (doc-test per public item),
@@ -909,7 +922,8 @@ class DocExamplesSpec extends SparkSpec {
       "Multimodal" -> graft.operators.Multimodal,
       "LayoutQueries" -> graft.operators.LayoutQueries,
       "SqlSurfaceQueries" -> graft.operators.SqlSurfaceQueries,
-      "DslQueries" -> graft.operators.DslQueries)
+      "DslQueries" -> graft.operators.DslQueries,
+      "LshPairs" -> graft.operators.LshPairs)
     // a method is covered when some doc-example test names it after its object
     val names = testNames
     def hasExample(obj: String, m: String): Boolean =

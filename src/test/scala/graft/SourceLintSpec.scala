@@ -80,6 +80,18 @@ class SourceLintSpec extends AnyFunSuite {
     assert(counts === allowed, "StatefulProcessor subclasses per file")
   }
 
+  test("one sign-LSH pair kernel: only LshPairs uses minSharedTable, autoPlanesPerTable and lshBucketsOf (and StreamDedup's feed)") {
+    val scoped = SourceScan.mainSources.filter { case (file, _) =>
+      file.startsWith("graft/operators/") || file.startsWith("graft/streaming/") }
+    // files with a code line that names `member` other than its definition
+    def users(member: String): Set[String] = scoped.collect { case (file, lines)
+      if SourceScan.code(lines).exists(l => l.contains(member) && !l.contains(s"def $member")) => file }.toSet
+    val kernel = "graft/operators/LshPairs.scala"
+    assert(users("minSharedTable") === Set(kernel), "minSharedTable users")
+    assert(users("autoPlanesPerTable(") === Set(kernel), "autoPlanesPerTable( callers")
+    assert(users("lshBucketsOf(") === Set(kernel, "graft/streaming/StreamDedup.scala"), "lshBucketsOf( callers")
+  }
+
   test("no per-key buffering under graft/dsl: no groupByKey, no .toVector.sortBy") {
     val dsl = SourceScan.mainSources.filter(_._1.startsWith("graft/dsl/"))
     val offenders = dsl.collect { case (file, lines)
