@@ -225,14 +225,6 @@ object DedupQueries {
     sh.toSeq
   }
 
-  /** cache() only if this exact plan isn't already cached — d03 and d08
-    * share `minhashNearDupPairs`, and a second .cache() on the same plan
-    * logs "Asked to cache already cached data" and re-registers nothing. */
-  private def cached(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.cache()
-    df
-  }
-
   /** FNV-1a 64-bit — the JVM-loop hash for the signature hot path. The
     * minhash/simhash result contract does not depend on hash choice (LSH
     * candidates are re-verified with exact jaccard), so the sketch kernels
@@ -310,6 +302,14 @@ object DedupQueries {
       .toDF("doc_id", "band", "bh")
   }
 
+  /** The shingle frame of `docs` (doc_id, text) and its band rows, each
+    * read by the band self-join and the exact verify: the minhash kernels'
+    * slots `minhash.shingles` and `minhash.bands`. */
+  private def minhashFrames(s: SparkSession, docs: DataFrame): (DataFrame, DataFrame) = {
+    val sh = OpCache.persistRotating("minhash.shingles", shinglesOf(s, docs))
+    (sh, OpCache.persistRotating("minhash.bands", bandRowsTyped(s, sh)))
+  }
+
   /** The MinHash-LSH near-dup pipeline in its skew-proof form. Exact
     * duplicates (identical normalized text) are collapsed to one
     * representative BEFORE sketching, so an adversarial flood of m
@@ -322,8 +322,8 @@ object DedupQueries {
     * inherently O(m^2) in duplicate multiplicity (the output enumerates
     * every pair); the keep-one materialization (d07) stays linear.
     *
-    * Sketches + band rows are materialized once (cache) — without it the
-    * self-join recomputes the sketch on BOTH sides of every band row
+    * Sketches + band rows are materialized once (the `minhash` slots) —
+    * without it the self-join recomputes the sketch on BOTH sides of every band row
     * (measured 886s vs ~5s at sf0.1). At cluster scale the same principle
     * holds: persist the signature table before the band join.
     *
@@ -349,8 +349,7 @@ object DedupQueries {
   private[graft] def minhashNearDupPairsUnordered(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val groups = exactDupGroups(docs)
-    val sh = cached(shinglesOf(s, groups.select($"rep".as("doc_id"), $"text")))
-    val bands = cached(bandRowsTyped(s, sh))
+    val (sh, bands) = minhashFrames(s, groups.select($"rep".as("doc_id"), $"text"))
     val cand = bands.select($"band", $"bh", $"doc_id".as("rep_a"))
       .join(bands.select($"band", $"bh", $"doc_id".as("rep_b")), Seq("band", "bh"))
       .filter($"rep_a" < $"rep_b")
@@ -368,8 +367,7 @@ object DedupQueries {
     * which replays the full composition including this contract. */
   private[graft] def minhashNearDupPairsPreCollapsed(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    val sh = cached(shinglesOf(s, docs.select($"doc_id", $"text")))
-    val bands = cached(bandRowsTyped(s, sh))
+    val (sh, bands) = minhashFrames(s, docs.select($"doc_id", $"text"))
     val cand = bands.select($"band", $"bh", $"doc_id".as("rep_a"))
       .join(bands.select($"band", $"bh", $"doc_id".as("rep_b")), Seq("band", "bh"))
       .filter($"rep_a" < $"rep_b")
@@ -386,7 +384,7 @@ object DedupQueries {
     * self-join would explode as m²). */
   private def exactDupGroups(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    cached(docs
+    OpCache.persistRotating("exactDupGroups.groups", docs
       .select($"doc_id", $"text", md5(TextFns.normalize($"text")).as("k"))
       .groupBy($"k")
       // first(text) is order-nondeterministic across raw variants that share
@@ -490,18 +488,17 @@ object DedupQueries {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val groups = exactDupGroups(docs)
-    val sh = cached(shinglesOf(s, groups.select($"rep".as("doc_id"), $"text")))
-    val toks = cached(sh.select($"doc_id", explode($"sh").as("tok"))
+    val sh = OpCache.persistRotating("prefixFilter.shingles",
+      shinglesOf(s, groups.select($"rep".as("doc_id"), $"text")))
+    val toks = OpCache.persistRotating("prefixFilter.tokens", sh
+      .select($"doc_id", explode($"sh").as("tok"))
       .select($"doc_id", xxhash64($"tok").as("h")).distinct())
     val sizes = toks.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     val dfreq = toks.groupBy($"h").agg(count(lit(1)).as("df"))
     // prefix length p = n − ceil(0.8·n) + 1, with ceil(4n/5) = (4n+4) div 5.
-    // BOTH sides of the candidate self-join below read this frame —
-    // unpersisted, each side re-runs the df aggregation, the size
-    // aggregation, their joins and the per-doc ranking window from the
-    // cached toks (the round-9 63-Exchange plan); the rotating slot halves
-    // that pipeline to one computation, and the frame is small (O(prefix
-    // tokens), 8-byte hashes — far below the shingle table already cached).
+    // BOTH sides of the candidate self-join below read this frame: its
+    // slot runs the df and size aggregations, their joins and the ranking
+    // window once, and holds only O(prefix tokens) 8-byte hashes.
     val prefix = OpCache.persistRotating("prefixFilter.prefix",
       toks.join(dfreq, Seq("h")).join(sizes, Seq("doc_id"))
         .withColumn("r", row_number().over(
@@ -624,9 +621,8 @@ object DedupQueries {
     // the honest cost; real near-dup components have small diameters.
     // Small pair sets never reach this path at all — clusterLabels folds
     // them in one task below the LocalFoldMaxEdges gate.)
-    val edges = pairs.select($"doc_a", $"doc_b")
-      .union(pairs.select($"doc_b", $"doc_a"))
-      .toDF("src", "dst").cache()
+    val edges = OpCache.persistRotating("clusterLabels.edges",
+      pairs.select($"doc_a", $"doc_b").union(pairs.select($"doc_b", $"doc_a")).toDF("src", "dst"))
     // Iterate ONLY over nodes that have at least one edge: an isolated
     // node's label can never change, so it joins back once at the end
     // with cluster_id = its own id. At corpus scale this is the
@@ -646,10 +642,11 @@ object DedupQueries {
       val nbrMin = edges
         .join(labels.select($"doc_id".as("dst"), $"cluster_id".as("nl")), "dst")
         .groupBy($"src".as("doc_id")).agg(min($"nl").as("nmin"))
-      val stepped = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select($"doc_id", $"cluster_id".as("old"),
-          least($"cluster_id", coalesce($"nmin", $"cluster_id")).as("cluster_id"))
-        .cache()
+      // read twice by the pointer jump below; the next round's refill frees it
+      val stepped = OpCache.persistRotating("clusterLabels.stepped",
+        labels.join(nbrMin, Seq("doc_id"), "left")
+          .select($"doc_id", $"cluster_id".as("old"),
+            least($"cluster_id", coalesce($"nmin", $"cluster_id")).as("cluster_id")))
       // pointer jump: label := min(label, label(label)) — roughly doubles
       // the propagated distance every round. (A second jump per round was
       // measured at sf0.1 and only cut 8 rounds to 7 on the long-chain
@@ -675,7 +672,6 @@ object DedupQueries {
         "graft.rounds.clusterLabels",
         sum(($"cluster_id" =!= $"old").cast("long"))) // null (no rows) reads 0: converged
       changed = c
-      stepped.unpersist()
       labels = next.select($"doc_id", $"cluster_id")
       frontier += changed
       rounds += 1
@@ -686,7 +682,7 @@ object DedupQueries {
     org.slf4j.LoggerFactory.getLogger("graft.DedupQueries")
       .info(s"clusterLabels converged in $rounds rounds; " +
         s"frontier=${frontier.result().mkString(",")}")
-    edges.unpersist()
+    OpCache.release(s, "clusterLabels.edges", "clusterLabels.stepped") // labels is a checkpoint
     labels
   }
 
@@ -1109,9 +1105,8 @@ object DedupQueries {
         // itself is the codegen'd SimHash64Expr, so the tokenize -> hash ->
         // vote loop fuses into the corpus scan (the former typed-map kernel
         // survives in VectorExprSpec as the bit-equality reference)
-        val docs = Tables.documents(s, d)
-          .select($"doc_id", TextFns.simhash64(TextFns.tokens($"text")).as("sig"))
-          .cache()
+        val docs = OpCache.persistRotating("d04.signatures", Tables.documents(s, d)
+          .select($"doc_id", TextFns.simhash64(TextFns.tokens($"text")).as("sig")))
         val chunked = docs.select($"doc_id", $"sig",
           posexplode(array((0 until 4).map(c =>
             shiftright($"sig", c * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("chunk", "cv")))
@@ -1486,8 +1481,7 @@ object DedupQueries {
     */
   def incrementalNearDupPairs(s: SparkSession, docs: DataFrame, isNew: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
-    val sh = cached(shinglesOf(s, docs.select($"doc_id", $"text")))
-    val bands = cached(bandRowsTyped(s, sh))
+    val (sh, bands) = minhashFrames(s, docs.select($"doc_id", $"text"))
     incrementalFromNewBands(sh, bands, bands.filter(isNew))
   }
 
@@ -1510,11 +1504,10 @@ object DedupQueries {
     */
   def incrementalNearDupPairs(s: SparkSession, docs: DataFrame, newIds: DataFrame): DataFrame = {
     import s.implicits._
-    // computed once per query, like cached(), but freed with the returned
-    // plan: the streaming caller passes a new `docs` every micro-batch, and
-    // a CacheManager entry per batch would pin every batch's frames
-    val sh = shinglesOf(s, docs.select($"doc_id", $"text")).localCheckpoint(eager = false)
-    val bands = bandRowsTyped(s, sh).localCheckpoint(eager = false)
+    // rebuilt in every micro-batch of StreamIngest's fold: eager checkpoints
+    // (OpCache rule 2), freed by the ContextCleaner with their batch
+    val sh = shinglesOf(s, docs.select($"doc_id", $"text")).localCheckpoint()
+    val bands = bandRowsTyped(s, sh).localCheckpoint()
     incrementalFromNewBands(sh, bands,
       bands.join(newIds.select($"doc_id"), Seq("doc_id"), "left_semi"))
   }
@@ -1614,7 +1607,7 @@ object DedupQueries {
       tables: Int = LshTables, planesPerTable: Int = AutoPlanes,
       minCosMilli: Long = 400L): DataFrame = {
     import s.implicits._
-    LshPairs.selfPairs("d06", embeddings, tables, planesPerTable, EmbDim, _ < _)
+    LshPairs.selfPairs("embeddingLshPairs", embeddings, tables, planesPerTable, EmbDim, _ < _)
       .filter($"cos_milli" >= minCosMilli)
       .select($"a".as("vec_a"), $"b".as("vec_b"), $"cos_milli")
       .orderBy($"vec_a", $"vec_b")

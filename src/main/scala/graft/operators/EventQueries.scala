@@ -204,7 +204,7 @@ object EventQueries {
     // iteration is one join of the rank table (|V|) with edges (|E|) plus a
     // hash agg — the standard distributed PageRank round, linear per
     // iteration. On a cluster, edges would be pre-partitioned by src once
-    // and every iteration reuses that partitioning (here: cached + tiny
+    // and every iteration reuses that partitioning (here: slotted + tiny
     // ranks auto-broadcast). localCheckpoint every 5 rounds truncates
     // lineage, same discipline as d08's label propagation (amortized —
     // measured cheaper than both per-round and end-only checkpointing).
@@ -1241,10 +1241,7 @@ object EventQueries {
     val s = edges.sparkSession
     import s.implicits._
     // deg is referenced three times (both orientation joins + the final
-    // degree report); persisting it keeps the degree aggregation single-run
-    // slot named after the OPERATOR, not one caller: any query invoking
-    // triangleCounts rotates this slot, so the name must say whose cache
-    // it is (the round-9 advisory)
+    // degree report); its slot keeps the degree aggregation single-run
     val deg = OpCache.persistRotating("triangleCounts.deg",
       edges.select($"u".as("n")).unionAll(edges.select($"v".as("n")))
         .groupBy($"n").agg(count(lit(1)).as("deg")))
@@ -1252,10 +1249,11 @@ object EventQueries {
     val withOrd = edges
       .join(deg.select($"n".as("u"), struct($"deg", $"n").as("uo")), "u")
       .join(deg.select($"n".as("v"), struct($"deg", $"n").as("vo")), "v")
-    val oriented = withOrd.select(
+    // read three times: both wedge sides and the closing join
+    val oriented = OpCache.persistRotating("triangleCounts.oriented", withOrd.select(
       when($"uo" < $"vo", $"u").otherwise($"v").as("src"),
       when($"uo" < $"vo", $"v").otherwise($"u").as("dst"),
-      when($"uo" < $"vo", $"vo").otherwise($"uo").as("dord")).cache()
+      when($"uo" < $"vo", $"vo").otherwise($"uo").as("dord")))
     val wedges = oriented.as("o1")
       .join(oriented.as("o2"),
         $"o1.src" === $"o2.src" && $"o1.dord" < $"o2.dord")
@@ -1470,12 +1468,12 @@ object EventQueries {
     val s = nodes.sparkSession
     import s.implicits._
     val outw = edges.groupBy($"src").agg(sum($"w").as("ow"))
-    // The join with outw shuffles both sides on src, so the CACHED ew is
+    // The join with outw shuffles both sides on src, so the slotted ew is
     // already hash-partitioned on the per-iteration join key — don't add an
     // explicit repartition here (measured: it only inserts a redundant
     // pre-cache shuffle; the loop below never re-shuffles ew as-is).
-    val ew = edges.join(outw, "src").cache()
-    val zeros = nodes.select($"k", lit(0L).as("c")).cache()
+    val ew = OpCache.persistRotating("pageRank.weightedEdges", edges.join(outw, "src"))
+    val zeros = OpCache.persistRotating("pageRank.zeros", nodes.select($"k", lit(0L).as("c")))
     var r = zeros.select($"k", lit(1000000L).as("r"))
     for (i <- 1 to iters) {
       // ow == 0 (a source whose weights sum to zero) contributes NOTHING:
@@ -1492,8 +1490,7 @@ object EventQueries {
         .select($"k", (lit(150000L) + expr("(85 * c) div 100")).as("r"))
       if (i % 5 == 0 || i == iters) r = r.localCheckpoint()
     }
-    ew.unpersist()
-    zeros.unpersist()
+    OpCache.release(s, "pageRank.weightedEdges", "pageRank.zeros") // r is a checkpoint
     r
   }
 }

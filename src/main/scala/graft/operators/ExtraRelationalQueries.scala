@@ -283,7 +283,7 @@ object ExtraRelationalQueries {
       (s, d) => {
         import s.implicits._
         // the array table feeds both the report and the explode-roundtrip
-        // side of its self-join — one rotating-slot persist instead of two
+        // side of its self-join — one slot instead of two
         // collect_list shuffles of the whole fact table
         val base = OpCache.persistRotating("q37.base",
           Tables.lineitem(s, d)
@@ -1280,11 +1280,10 @@ object ExtraRelationalQueries {
       "q49_bloom_semijoin_prune",
       (s, d) => {
         import s.implicits._
-        val dim = Tables.orders(s, d)
+        val dim = OpCache.persistRotating("q49.dim", Tables.orders(s, d)
           .filter($"o_totalprice" > 450000.0)
-          .select($"o_orderkey")
-          .cache()
-        // Sized from the real key count (one cheap count over the cached dim);
+          .select($"o_orderkey"))
+        // Sized from the real key count (one cheap count over the slotted dim);
         // the merged bloom is deterministic — fixed-seed hashes, OR-merge.
         val bloom = dim.stat.bloomFilter("o_orderkey", math.max(dim.count(), 1000L), 0.01)
         val bc = s.sparkContext.broadcast(bloom)
@@ -1461,7 +1460,7 @@ object ExtraRelationalQueries {
     // truncating division: lift = c_ab*N/(c_a*c_b). Brand dimension
     // arrives by broadcast; min support 5 prunes noise pairs before the
     // metric joins. The per-basket set is referenced three times (pairs,
-    // item counts, basket count), so it persists via the rotating slot.
+    // item counts, basket count), so it lives in a slot.
     QueryDef(
       "q69_market_basket",
       (s, d) => {
@@ -1636,11 +1635,10 @@ object ExtraRelationalQueries {
             sum(floor($"o_totalprice" * 100).cast("long")).as("mon_c"))
         val endTs = per.agg(max($"last_ts").as("end_ts"))
         // one O(customers) profile, computed once: 6 histogram scans + the
-        // scoring scan all read the cache, not re-aggregate orders
-        val perR = per.crossJoin(broadcast(endTs))
+        // scoring scan all read the slot, not re-aggregate orders
+        val perR = OpCache.persistRotating("q103.profile", per.crossJoin(broadcast(endTs))
           .withColumn("rec_days", datediff($"end_ts", $"last_ts").cast("long"))
-          .select($"o_custkey", $"rec_days", $"freq", $"mon_c")
-          .cache()
+          .select($"o_custkey", $"rec_days", $"freq", $"mon_c"))
         val ps = Seq(0.2, 0.4, 0.6, 0.8)
         // ONE two-level selection over the (dimension, value) unpivot — the
         // q102 explode/Generate shape, never Expand — instead of three

@@ -1,69 +1,82 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 
-/** Rotating per-operator cache slots for operators whose plan reads one
-  * expensive intermediate (postings, shingle frames) several times.
+/** The one caching discipline of graft's operators and streaming twins.
   *
-  * The leak this fixes: a bare `.cache()` inside an operator accrues one
-  * corpus-sized cached frame PER INVOCATION for the life of the session
-  * (the round-7 advisory). An eager localCheckpoint-then-unpersist would
-  * fix the leak but truncate the returned lineage — the plan-lint and
-  * plan-quality specs grade `fn(...)`'s full plan, and construction would
-  * silently become an action. Instead each operator persists into a named
-  * slot and the NEXT invocation of the same operator unpersists the
-  * previous generation: the returned plan stays lazy, and the operator's
-  * executor-storage footprint is bounded to its latest invocation.
+  *  1. A frame one plan reads more than once goes into a slot named
+  *     `<operator>.<frame>` ([[persistRotating]]); refilling the slot frees
+  *     its previous generation, and the returned plan stays lazy. A loop
+  *     whose slot readers all run before it returns frees the slot there
+  *     ([[release]]).
+  *  2. A frame derived from its own previous round, or rebuilt in every
+  *     micro-batch of a streaming fold, is an eager `localCheckpoint()` or
+  *     [[checkpointObserved]], never a slot: a refill would free the next
+  *     round's input before that round has run (Spark then recompiles it
+  *     against the raw scan), and a fold's slot would outlive its stream.
   *
-  * Slots are scoped PER SESSION (the round-8 advisory): the registry key
-  * includes the owning SparkSession's identity, so two sessions — or the
-  * session-per-suite test harness — invoking the same operator never
-  * unpersist each other's live frames. Rotations log at INFO so an
-  * unexpected mid-consumption eviction is diagnosable. Concurrent
-  * invocations of ONE operator in ONE session still rotate each other's
-  * cache early — harmless for correctness (Spark recomputes evicted
-  * partitions from lineage), only a perf hazard, and no driver here
-  * (Verify, Bench, the test suites) runs an operator concurrently with
-  * itself in one session.
+  * Nothing else under `graft/operators` or `graft/streaming` caches
+  * (SourceLintSpec).
   *
-  * [[checkpointObserved]] is the other way operators materialize: the
-  * iterative graph kernels' eager checkpoints with their one side-metric. */
+  * Each slot is a temp view in the session that filled it, tagged with
+  * that session's id, and a session frees only generations it filled: a
+  * clone (every streaming query runs in one) inherits its parent's views
+  * but never frees the parent's frames. A dropped session's views go with
+  * it; its last generations stay in the CacheManager until `clearCache`.
+  * Overlapping invocations of one operator, or two sessions persisting
+  * equal plans (one CacheManager entry), can free a frame early: Spark
+  * recomputes it from lineage, so only speed is at stake. */
 private[graft] object OpCache {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.OpCache")
 
-  private val slots = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val Owner = "graft.opcache.session" // view property: the filling session's id
+
+  private def viewOf(slot: String) = "graft_opcache_" + slot.replace('.', '_')
+
+  /** `view`'s generation in `s`, if `s` filled it. */
+  private def owned(s: SparkSession, view: String): Option[DataFrame] =
+    s.sessionState.catalog.getRawTempView(view)
+      .filter(_.tableMeta.properties.get(Owner).contains(Bridge.sessionId(s))).map(_ => s.table(view))
 
   /** Persist `df` (MEMORY_AND_DISK: spills, never evicts under pressure)
-    * under `slot` in `df`'s session, unpersisting the slot's previous
-    * generation from THAT session only. */
+    * as the live generation of `slot` in `df`'s session, freeing the
+    * previous generation that session filled. */
   def persistRotating(slot: String, df: DataFrame): DataFrame = {
-    val key = s"${System.identityHashCode(df.sparkSession).toHexString}:$slot"
+    val s = df.sparkSession
+    val view = viewOf(slot)
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    Option(slots.put(key, p)).foreach { prev =>
-      // Unpersist the previous generation ONLY when it is a semantically
-      // different plan. CacheManager keys entries by sameResult of the
-      // NORMALIZED plans — two invocations over the same input path
-      // produce canonically EQUAL plans (InMemoryFileIndex compares
-      // rootPaths), so persist() above re-registered the SAME entry and
-      // unpersisting `prev` would evict the frame just cached: every
-      // same-plan slot was silently dead in any run that re-invoked its
-      // operator (the bench's warmup + timed protocol re-invokes every
-      // query). Comparing the analyzed plans instead misses what
-      // normalization erases (fresh CTE ids in a re-built WITH plan), and
-      // the slot dies the same way. When the plans match there is nothing
-      // extra to drop — the slot still holds exactly one entry.
+    owned(s, view).foreach { prev =>
+      // CacheManager keys entries by the normalized plan, so an equal plan
+      // (the same input read again, or a WITH plan re-built with fresh CTE
+      // ids) re-registered the previous entry above: freeing it would kill
+      // the frame just persisted
       val samePlan = scala.util.Try(
         prev.queryExecution.normalized.sameResult(p.queryExecution.normalized))
         .getOrElse(false)
-      if ((prev ne p) && !samePlan) {
+      if (!samePlan) {
         log.info(s"rotating cache slot '$slot': unpersisting the previous generation")
-        // a stopped owning session must not fail the new invocation
-        scala.util.Try(prev.unpersist(blocking = false))
+        prev.unpersist(blocking = false)
       }
     }
+    // straight into the session catalog: `createOrReplaceTempView` would run
+    // a command per fill and uncache the replaced view by its analyzed plan,
+    // which frees an equal re-built plan's shared entry
+    s.sessionState.catalog.createTempView(view, TemporaryViewRelation(
+      CatalogTable(TableIdentifier(view), CatalogTableType.VIEW, CatalogStorageFormat.empty, p.schema,
+        properties = Map(CatalogTable.VIEW_STORING_ANALYZED_PLAN -> "true", Owner -> Bridge.sessionId(s))),
+      Some(p.queryExecution.analyzed)), overrideIfExists = true)
     p
+  }
+
+  /** Free the generations of `slots` that `s` filled and drop their views. */
+  def release(s: SparkSession, slots: String*): Unit = slots.map(viewOf).foreach { view =>
+    owned(s, view).foreach(_.unpersist(blocking = false))
+    s.sessionState.catalog.dropTempView(view)
   }
 
   /** Eager `localCheckpoint` of `df` that also returns `metric` (a Long

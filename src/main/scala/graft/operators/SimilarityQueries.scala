@@ -346,9 +346,11 @@ object SimilarityQueries {
       s: SparkSession, e: DataFrame,
       k: Int = KmK, iters: Int = KmIters): Array[Array[Long]] = {
     import s.implicits._
-    val mv = e.select($"vec_id", $"embedding").as[(Long, Array[Float])]
-      .map { case (id, emb) => (id, milliOf(emb)) }
-      .toDF("vec_id", "m").as[(Long, Array[Long])].cache()
+    // read by the seed pick and by every round
+    val mv = OpCache.persistRotating("kmeansCodebook.milli",
+      e.select($"vec_id", $"embedding").as[(Long, Array[Float])]
+        .map { case (id, emb) => (id, milliOf(emb)) }
+        .toDF("vec_id", "m")).as[(Long, Array[Long])]
     var cb: Array[Array[Long]] = mv
       .map { case (id, m) => (id, m, (id * IvfHashMult) ^ Long.MinValue) }
       .toDF("vec_id", "m", "h")
@@ -371,7 +373,7 @@ object SimilarityQueries {
       sums.foreach { case (c, j, sv, n) => next(c)(j) = Math.floorDiv(sv, n) }
       cb = next
     }
-    mv.unpersist()
+    OpCache.release(s, "kmeansCodebook.milli")
     cb
   }
 
@@ -862,8 +864,7 @@ object SimilarityQueries {
     QueryDef(
       "s20_hybrid_rrf",
       (s, d) => {
-        val dt = OpCache.persistRotating("s20.postings",
-          postings(Tables.documents(s, d)))
+        val dt = postings(Tables.documents(s, d))
         rrfFuse(lexTopR(dt, dt), vecTopRExact(Tables.embeddings(s, d)))
       },
       oracle = Some(s20OracleSql)),
@@ -887,8 +888,7 @@ object SimilarityQueries {
     QueryDef(
       "s21_hybrid_rrf_indexed",
       (s, d) => {
-        val dt = OpCache.persistRotating("s21.postings",
-          postings(Tables.documents(s, d)))
+        val dt = postings(Tables.documents(s, d))
         rrfFuse(lexTopR(dt, impactPrunedPostings(dt)),
           vecTopRLsh(Tables.embeddings(s, d)))
       },
@@ -1444,9 +1444,8 @@ object SimilarityQueries {
     require(k > 0, s"need k > 0, got $k")
     val s = docs.sparkSession
     import s.implicits._
-    // postings are read three times (dl, dft, scoring); the rotating slot
-    // bounds the cached postings to the latest invocation (OpCache)
-    val dt = OpCache.persistRotating("s10.postings", postings(docs))
+    // postings are read three times (dl, dft, scoring)
+    val dt = postings(docs)
     val dl = dt.groupBy($"doc_id").agg(sum($"tf").as("dl"))
     val dft = dt.groupBy($"tok").agg(count(lit(1)).as("df"))
     val terms = queries
@@ -1469,7 +1468,8 @@ object SimilarityQueries {
   }
 
   /** The postings table (doc_id, tok, tf) over a (doc_id, text) frame —
-    * the one corpus-scale shuffle every lexical operator here shares.
+    * the one corpus-scale shuffle every lexical operator here shares, read
+    * more than once by each: one slot, so s20 and s21 share one frame.
     *
     * Example (run verbatim by DocExamplesSpec):
     * {{{
@@ -1479,8 +1479,9 @@ object SimilarityQueries {
     * }}}
     */
   private[graft] def postings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+    OpCache.persistRotating("postings.docTerms",
+      docs.select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
 
   /** The impact-ordered index build: each term's posting list pruned to
     * its [[ImpactPostings]] highest-tf entries (tie: lowest doc_id). One
@@ -1809,7 +1810,7 @@ object SimilarityQueries {
       dim: Int = DedupQueries.embDim,
       k: Int = 5): DataFrame = {
     import s.implicits._
-    val dir = OpCache.persistRotating("s11.dir",
+    val dir = OpCache.persistRotating("mutualKnnPairs.dir",
       knnGraph(s, embeddings, tables, planesPerTable, dim, k)
         .select($"vec_id".as("a"), $"nbr_id".as("b")))
     dir
@@ -2058,7 +2059,7 @@ object SimilarityQueries {
       dim: Int = DedupQueries.embDim): DataFrame = {
     import s.implicits._
     // one scan: shingle keys + token counts + the split, read by both gates
-    val sh = OpCache.persistRotating("s23.shingles",
+    val sh = OpCache.persistRotating("decontaminatedCorpus.shingles",
       TextQueries.docShingles(docs).withColumn("is_train", trainPred))
     val trainSh = sh.filter($"is_train")
     val heldSh = sh.filter(!$"is_train")
@@ -2124,7 +2125,7 @@ object SimilarityQueries {
       k: Int = 5): DataFrame = {
     import s.implicits._
     val w = Window.partitionBy($"a").orderBy($"cos_milli".desc, $"b")
-    LshPairs.selfPairs("s09", embeddings, tables, planesPerTable, dim, _ =!= _)
+    LshPairs.selfPairs("knnGraph", embeddings, tables, planesPerTable, dim, _ =!= _)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= k)
       .select($"a".as("vec_id"), $"rank", $"b".as("nbr_id"), $"cos_milli")

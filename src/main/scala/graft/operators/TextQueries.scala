@@ -236,9 +236,9 @@ object TextQueries {
     // A 64-bit collision would merge two shingles' df counts; at n distinct
     // shingles the chance is ~n^2/2^65 (4M shingles -> ~5e-7), the same
     // accepted risk as d01's md5 keys.
-    val ex = shingleKeys8(docs)
-      .select($"doc_id", $"lang", explode($"gs").as("g"))
-      .cache() // read twice: document-frequency agg + the join back
+    // read twice: document-frequency agg + the join back
+    val ex = OpCache.persistRotating("boilerplateSpans.shingles", shingleKeys8(docs)
+      .select($"doc_id", $"lang", explode($"gs").as("g")))
     val docFreq = ex.groupBy($"g").agg(count(lit(1)).as("df"))
     val perDoc = ex.join(docFreq, Seq("g"))
       .groupBy($"doc_id", $"lang")
@@ -457,9 +457,8 @@ object TextQueries {
         // materialize once: both split branches read the shingle-key table
         // (keys computed in-scan by ShingleHashesExpr — only 8-byte longs
         // ever shuffle; same collision budget as boilerplateSpans)
-        val sh = shingleKeys8(Tables.documents(s, d))
-          .withColumn("split", when(splitBucket < TrainPct, "train").otherwise("heldout"))
-          .cache()
+        val sh = OpCache.persistRotating("t07.shingles", shingleKeys8(Tables.documents(s, d))
+          .withColumn("split", when(splitBucket < TrainPct, "train").otherwise("heldout")))
         val trainSh = sh.filter($"split" === "train")
           .select(explode($"gs").as("g")).distinct()
         val heldout = sh.filter($"split" === "heldout")
@@ -858,7 +857,8 @@ object TextQueries {
     // ([[applyBpeMerge]]) and a DuckDB list_reduce lambda, so the learned
     // merges hash-match (the s04 unrolled-iterations trick). Rounds are
     // unrolled 3x in the oracle; production runs the same loop to 30k+
-    // merges, each round agg + map over the vocab (~MBs), not the corpus.
+    // merges; the word table and its rewrites are eager checkpoints, so
+    // each round is one agg + map over the vocab (~MBs), not the corpus.
     QueryDef(
       "t13_bpe_merges",
       (s, d) => {
@@ -873,7 +873,7 @@ object TextQueries {
               .map(cp => new String(Character.toChars(cp)))
             (chars.mkString(" "), f)
           }
-          .toDF("sym", "freq").cache()
+          .toDF("sym", "freq").localCheckpoint()
         val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
         for (r <- 1 to BpeRounds) {
           val top = words.as[(String, Long)]
@@ -887,13 +887,10 @@ object TextQueries {
             .as[(String, String, Long)].collect()(0)
           merges += ((r, top._1, top._2, top._3))
           val (m1, m2) = (top._1, top._2)
-          val next = words.as[(String, Long)]
+          if (r < BpeRounds) words = words.as[(String, Long)]
             .map { case (sym, f) => (applyBpeMerge(sym, m1, m2), f) }
-            .toDF("sym", "freq").cache()
-          words.unpersist()
-          words = next
+            .toDF("sym", "freq").localCheckpoint()
         }
-        words.unpersist()
         s.createDataset(merges.toSeq)
           .toDF("merge_rank", "s1", "s2", "pair_count")
           .orderBy($"merge_rank")
@@ -1152,9 +1149,10 @@ object TextQueries {
       "t18_bpe_tokenize",
       (s, d) => {
         import s.implicits._
-        val lw = Tables.documents(s, d)
+        // read twice: the word table below and the final per-lang join
+        val lw = OpCache.persistRotating("t18.wordCounts", Tables.documents(s, d)
           .select($"lang", explode(TextFns.tokens($"text")).as("w"))
-          .groupBy($"lang", $"w").agg(count(lit(1)).as("cnt")).cache()
+          .groupBy($"lang", $"w").agg(count(lit(1)).as("cnt")))
         var words = lw.groupBy($"w").agg(sum($"cnt").as("freq"))
           .as[(String, Long)]
           .map { case (w, f) =>
@@ -1162,7 +1160,7 @@ object TextQueries {
               .map(cp => new String(Character.toChars(cp)))
             (w, chars.mkString(" "), f)
           }
-          .toDF("w", "sym", "freq").cache()
+          .toDF("w", "sym", "freq").localCheckpoint()
         for (_ <- 1 to BpeRounds) {
           val top = words.as[(String, String, Long)]
             .flatMap { case (_, sym, f) =>
@@ -1174,11 +1172,9 @@ object TextQueries {
             .orderBy($"cnt".desc, $"s1", $"s2").limit(1)
             .as[(String, String, Long)].collect()(0)
           val (m1, m2) = (top._1, top._2)
-          val next = words.as[(String, String, Long)]
+          words = words.as[(String, String, Long)]
             .map { case (w, sym, f) => (w, applyBpeMerge(sym, m1, m2), f) }
-            .toDF("w", "sym", "freq").cache()
-          words.unpersist()
-          words = next
+            .toDF("w", "sym", "freq").localCheckpoint()
         }
         val nsym = words.as[(String, String, Long)]
           .map { case (w, sym, _) => (w, sym.split(' ').length.toLong) }
@@ -1774,8 +1770,8 @@ object TextQueries {
       "t24_blocklist",
       (s, d) => {
         import s.implicits._
-        val docs = Tables.documents(s, d)
-          .select($"doc_id", TextFns.tokens($"text").as("t")).cache()
+        val docs = OpCache.persistRotating("t24.tokens", Tables.documents(s, d)
+          .select($"doc_id", TextFns.tokens($"text").as("t")))
         val hits = BlockPhrases.groupBy(_.split(' ').length).toSeq.map {
           case (len, phrases) =>
             val keys = phrases.toDF("phrase")
@@ -1819,14 +1815,13 @@ object TextQueries {
       (s, d) => {
         import s.implicits._
         val t = TextFns.tokens($"text")
-        val base = Tables.documents(s, d)
+        val base = OpCache.persistRotating("t25.base", Tables.documents(s, d)
           .select($"doc_id", $"lang",
             md5(TextFns.normalize($"text")).as("ck"),
             (size(t) >= 20 &&
               floor(size(array_distinct(t)) * lit(1000.0) / size(t)) >= 200L)
               .as("quality"),
-            TextFns.tokens($"text").as("t"))
-          .cache()
+            TextFns.tokens($"text").as("t")))
         val canon = base.groupBy($"ck").agg(min($"doc_id").as("keeper"))
         val hit = BlockPhrases.groupBy(_.split(' ').length).toSeq.map {
           case (len, phrases) =>
@@ -1984,7 +1979,7 @@ object TextQueries {
     // tagger a corpus pipeline runs for routing and inspection. IDF uses
     // t12's libm-free trick: floor(log2(n_docs/df)) = length(bin(n_docs
     // div df)) - 1, so scores are exact integers on both engines. Shape:
-    // one corpus explode into (doc, tok, tf) hash agg, a vocab-sized df
+    // the postings slot (one corpus explode into (doc, tok, tf)), a vocab-sized df
     // agg joined back ON THE TOKEN (vocab-sized build side), the 1-row
     // n_docs broadcast, and a per-doc WindowGroupLimit top-3 (t17's
     // partial->final shape) — the corpus is never sorted globally.
@@ -1992,10 +1987,7 @@ object TextQueries {
       "t29_keywords",
       (s, d) => {
         import s.implicits._
-        val dt = Tables.documents(s, d)
-          .select($"doc_id", explode(TextFns.tokens($"text")).as("tok"))
-          .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-          .cache()
+        val dt = SimilarityQueries.postings(Tables.documents(s, d))
         val dfreq = dt.groupBy($"tok").agg(count(lit(1)).as("df"))
         val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
         val wk = Window.partitionBy($"doc_id").orderBy($"score".desc, $"tok")
@@ -2561,12 +2553,12 @@ object TextQueries {
     val s = docs.sparkSession
     import s.implicits._
     // positional shingle keys straight from the codegen'd expression — no
-    // shingle strings, no typed map; (pos, g) comes off the scan stage
-    val pos = docs
+    // shingle strings, no typed map; (pos, g) comes off the scan stage.
+    // Read three times: df agg + both self-join sides
+    val pos = OpCache.persistRotating("verifiedSpanRows.positions", docs
       .select($"doc_id",
         posexplode(TextFns.shingleHashes(TextFns.tokens($"text"))).as(Seq("p0", "g")))
-      .select($"doc_id", ($"p0" + 1L).cast("long").as("pos"), $"g")
-      .cache() // read three times: df agg + both self-join sides
+      .select($"doc_id", ($"p0" + 1L).cast("long").as("pos"), $"g"))
     val keep = pos.groupBy($"g")
       .agg(countDistinct($"doc_id").as("nd"))
       .filter($"nd" >= 2 && $"nd" <= maxDf)
@@ -3009,13 +3001,11 @@ object TextQueries {
     // one scan: shingle keys (in-scan ShingleHashesExpr) and the token
     // count ride the same projection — never a self-join back for n_toks.
     // The shingle frame is read twice (heldout probe side + train side);
-    // persisting it trades one scan+shingle pass (~40% of the operator's
-    // work, measured at sf0.1) for executor storage. A rotating slot
-    // (OpCache) bounds that storage to the LATEST invocation — at 100 TB
-    // the cached corpus-wide shingle arrays are this operator's biggest
-    // memory consumer, and a bare cache() accrued one per invocation for
-    // the life of the session (the round-7 advisory).
-    val sh = OpCache.persistRotating("t44.shingles", docShingles(docs)
+    // its slot trades one scan+shingle pass (~40% of the operator's work,
+    // measured at sf0.1) for executor storage, bounded to the latest
+    // invocation — at 100 TB the corpus-wide shingle arrays are this
+    // operator's biggest memory consumer.
+    val sh = OpCache.persistRotating("decontaminateReport.shingles", docShingles(docs)
       .withColumn("split", when(trainPred, "train").otherwise("heldout")))
     val heldSh = sh.filter($"split" === "heldout")
       .select(explode($"gs").as("g")).distinct()

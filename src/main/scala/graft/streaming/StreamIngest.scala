@@ -150,13 +150,9 @@ object StreamIngest {
     val canon = foldCanon(None, docs)
     // The admitted canon table feeds FIVE consumers (the pair miner's doc
     // frame, the ck mapping's two join sides, the survivor reps, and the
-    // packer) — unpersisted, each one re-runs the tokenize/lang-score
-    // feature pass plus the content-key aggregation from the raw scan
-    // (round-9 before-plan: ~10 documents scans, 54 Exchanges). One
-    // rotating-slot persist collapses them to a single computation; the
-    // per-batch streaming twin already materializes the same frame via
-    // localCheckpoint, so the two paths stay structurally aligned.
-    val admitted = graft.operators.OpCache.persistRotating("t38.admitted",
+    // packer): its slot runs the feature pass and the content-key
+    // aggregation once, as the streaming twin's fold checkpoint does.
+    val admitted = graft.operators.OpCache.persistRotating("ingestBatch.admitted",
       canon.filter(TextQueries.admissionGate))
     // Unordered pair set (the ck joins + distinct below don't need d03's
     // declared output sort), via the pre-collapsed miner: admitted holds

@@ -19,6 +19,11 @@ object Bridge {
   /** Unwrap a Column to its Catalyst expression. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The session's unique id: a clone (every streaming query runs in one)
+    * gets its own. */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
   /** Register `cosine_milli(a, b)` for SQL use on an existing session —
     * the runtime equivalent of `SparkSessionExtensions.injectFunction`. */
   def registerCosineMilli(spark: SparkSession): Unit =

@@ -441,6 +441,34 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("OpCache: a cloned session's fill never frees the generation its parent filled") {
+    // every streaming query runs its batches in a clone of its session, and
+    // a clone inherits its parent's temp views, the slot views among them
+    import graft.operators.OpCache
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val a = OpCache.persistRotating("opcache.clone.test", Seq(1L, 2L).toDF("x"))
+    a.count()
+    val inClone = Seq.newBuilder[DataFrame]
+    val ms = MemoryStream[Long]
+    val q = ms.toDF().writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+      assert(b.sparkSession ne spark)
+      inClone += OpCache.persistRotating("opcache.clone.test", b.select($"value".as("x")))
+      ()
+    }.start()
+    try Seq(3L, 4L).foreach { v => ms.addData(v); q.processAllAvailable() }
+    finally q.stop()
+    val Seq(b1, b2) = inClone.result()
+    assert(a.storageLevel !== StorageLevel.NONE,
+      "a cloned session's fill evicted its parent's live frame")
+    assert(b1.storageLevel === StorageLevel.NONE,
+      "the clone's own rotation must unpersist the generation it filled")
+    Seq(a, b2).foreach(_.unpersist())
+  }
+
   test("OpCache slot survives re-persisting a re-built CTE plan (CacheManager's normalized key)") {
     // each build of a WITH plan gets fresh CTE ids: the analyzed plans
     // differ, the normalized ones (the key CacheManager matches on) do not,

@@ -92,6 +92,21 @@ class SourceLintSpec extends AnyFunSuite {
     assert(users("lshBucketsOf(") === Set(kernel, "graft/streaming/StreamDedup.scala"), "lshBucketsOf( callers")
   }
 
+  test("one caching discipline: under graft/operators and graft/streaming only OpCache caches, with no process-global map") {
+    val scoped = SourceScan.mainSources.filter { case (file, _) =>
+      file.startsWith("graft/operators/") || file.startsWith("graft/streaming/") }
+    val opCache = "graft/operators/OpCache.scala"
+    val caching = """\.cache\(\)|\.persist\(|\.unpersist\(|localCheckpoint\(\s*(eager\s*=\s*)?false""".r
+    val offenders = scoped.collect { case (file, lines)
+      if file != opCache && SourceScan.code(lines).exists(l => caching.findFirstIn(l).nonEmpty) => file }
+    assert(offenders.isEmpty, s"caching outside OpCache: ${offenders.mkString(", ")}")
+    val registry = scoped.collectFirst { case (`opCache`, lines) => SourceScan.code(lines) }
+      .getOrElse(fail("scan found no OpCache"))
+    val globals = registry.filter(l => l.contains("ConcurrentHashMap") || l.contains("mutable.") ||
+      l.trim.startsWith("private var") || l.trim.startsWith("var "))
+    assert(globals.isEmpty, s"OpCache holds process-global mutable state:\n${globals.mkString("\n")}")
+  }
+
   test("no per-key buffering under graft/dsl: no groupByKey, no .toVector.sortBy") {
     val dsl = SourceScan.mainSources.filter(_._1.startsWith("graft/dsl/"))
     val offenders = dsl.collect { case (file, lines)
